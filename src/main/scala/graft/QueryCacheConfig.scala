@@ -6,6 +6,20 @@ import graft.log.{CacheLog, NoOpLog}
 /** Configuration for the incremental aggregation cache
   * (reference: QueryCacheConfig, src/lib.rs:21-72).
   *
+  * Subsumption needs no switch. On an exact-fingerprint miss the probes
+  * answer from a warm twin's state: a finer date_trunc grain (regrain),
+  * an unbounded time range (rerange), tumbling state at a hop's slide
+  * (rehop), a finer tumbling window (retumble), the date_trunc spelling
+  * of a window (rewindow), the plain drill-down of grouping sets
+  * (regroup), a declared-dimension drill-down or its unfiltered form
+  * (redim/refilter, opt-in by `redimDimensionColumns`), fact-keyed state
+  * of a static-dim join (rejoin), and a superset of the measures
+  * (remeasure). A query the single-state path declines may still be
+  * factorized (two-fact joins) or kept as a materialized row view
+  * (filter queries). None of them changes an answer. Which probe may
+  * answer for which is stated once, in the composition table
+  * `IncrementalAggExecutor.composition`.
+  *
   * @param cache                 state store (reference src/lib.rs:28)
   * @param defaultTemporalColumn temporal column assumed when the group-by
   *                              doesn't name one (src/lib.rs:22,31-38)
@@ -92,36 +106,6 @@ import graft.log.{CacheLog, NoOpLog}
   *                              survives, only the buckets covering
   *                              [lo, hi) are dropped and re-scanned on
   *                              the next warm run.
-  * @param regrainFromFinerState answer a coarse-grain temporal query
-  *                              (`date_trunc('day', ts)`) from warm
-  *                              FINER-grain state (`'hour'`) when the
-  *                              plans are otherwise identical: the finer
-  *                              buckets re-aggregate into the coarse
-  *                              ones through the normal merge (every
-  *                              whitelisted state is re-aggregable by
-  *                              contract), and the coarse fingerprint
-  *                              then stores its own state for next time.
-  *                              Sound for grains that nest exactly in
-  *                              UTC (minute⊂hour⊂day⊂week, day⊂month⊂
-  *                              quarter⊂year — the session contract
-  *                              already pins UTC, sources/Tables). The
-  *                              same flag also gates the WINDOW-bucket
-  *                              form (retumbleFromFinerState): a coarse
-  *                              TUMBLING window (`window(ts,'1 hour')`)
-  *                              answers from warm finer tumbling state
-  *                              whose duration divides it
-  *                              (`'15 minutes'`) — epoch-aligned
-  *                              default-start windows nest exactly, the
-  *                              replay re-buckets fine starts with the
-  *                              analyzer's own arithmetic, and hopping
-  *                              queries compose through it (hop → its
-  *                              tumbling-at-slide twin → an even finer
-  *                              tumbling state). The reference shares
-  *                              the all-or-nothing fingerprint
-  *                              limitation this lifts
-  *                              (src/aggregate.rs:89). ON by default —
-  *                              it only engages on an exact-fingerprint
-  *                              MISS and never changes answers.
   * @param redimDimensionColumns opt-in group-by DIMENSION subsumption
   *                              (the drill-down ↔ roll-up pair dashboards
   *                              hit constantly): on an exact-fingerprint
@@ -150,176 +134,6 @@ import graft.log.{CacheLog, NoOpLog}
   *                              (case-insensitive); empty set = feature
   *                              off. No reference analog (its fingerprint
   *                              is all-or-nothing, src/aggregate.rs:89).
-  * @param rejoinFromFactState JOIN subsumption (eager-aggregation
-  *                              replay): a query aggregating a fact ⋈
-  *                              declared-static-dim join by DIM
-  *                              attributes (`GROUP BY day, c_mktsegment`)
-  *                              can, on an exact-fingerprint miss,
-  *                              answer from the warm state of the plain
-  *                              FACT query grouped by the JOIN KEY
-  *                              (`GROUP BY day, user_id`): the state
-  *                              re-joins the static dim on the key, the
-  *                              key merges away, and no fact row below
-  *                              the watermark is rescanned. Sound by the
-  *                              aggregate-join commute (Yan & Larson,
-  *                              VLDB'95 eager aggregation): with inner
-  *                              join on one equi-pair, measures
-  *                              referencing only fact columns, and
-  *                              grouping split cleanly by side, each
-  *                              state row joining m dim rows lands in
-  *                              exactly the m groups its underlying fact
-  *                              rows would have — multiplicity included.
-  *                              One fact-grained state serves EVERY
-  *                              dimension breakdown (by segment, by
-  *                              nation, …). Requires the dim side
-  *                              declared in staticDimensionTables (the
-  *                              same contract the direct cached-join
-  *                              path needs). ON by default; engages only
-  *                              on a miss and never changes answers.
-  * @param remeasureFromSupersetState MEASURE subsumption: on an
-  *                              exact-fingerprint MISS, probe for warm
-  *                              state of the SAME plan (same child, same
-  *                              grouping — keyed by a measure-erased BASE
-  *                              fingerprint) whose measure set is a
-  *                              SUPERSET of this query's, and answer by
-  *                              projecting out just the state columns this
-  *                              query needs (dashboards run count-only
-  *                              variants of count+sum+avg panels
-  *                              constantly). Unlike grain/dimension
-  *                              subsumption no re-aggregation happens at
-  *                              all: each measure's partial state is a
-  *                              deterministic function of (child,
-  *                              grouping, measure), so the projected
-  *                              columns are byte-for-byte the state this
-  *                              query would have captured — the replay is
-  *                              answer-identical, and the put then stores
-  *                              the projection under THIS fingerprint.
-  *                              Measures are matched by single-measure
-  *                              twin fingerprints, so "the same measure"
-  *                              means Catalyst-canonically the same
-  *                              expression. ON by default; it only
-  *                              engages on a miss and never changes
-  *                              answers. No reference analog (its
-  *                              fingerprint is all-or-nothing,
-  *                              src/aggregate.rs:89).
-  * @param rerangeFromUnboundedState RANGE subsumption on the temporal
-  *                              bucket (the "show me June" / "this week"
-  *                              dashboard slice): a query whose filter
-  *                              carries bucket-ALIGNED range conjuncts on
-  *                              the raw temporal column (`ts >= L AND
-  *                              ts < U` with `date_trunc(grain, L) = L`)
-  *                              can, on an exact-fingerprint miss, answer
-  *                              from the warm state of the same plan
-  *                              WITHOUT those conjuncts, sliced on the
-  *                              temporal bucket key. An aligned range
-  *                              equals a union of COMPLETE buckets, so
-  *                              per retained group the contributing row
-  *                              multiset is identical — exact for every
-  *                              measure, including measures over the
-  *                              temporal column itself. At micros
-  *                              resolution every comparison normalizes
-  *                              (`ts > v` ≡ `ts >= v+1µs`, `ts <= v` ≡
-  *                              `ts < v+1µs`), so BETWEEN slices too.
-  *                              One unbounded warm entry serves every
-  *                              aligned time-window panel. ON by
-  *                              default; engages only on a miss and
-  *                              never changes answers. No reference
-  *                              analog (all-or-nothing fingerprint,
-  *                              src/aggregate.rs:89).
-  * @param rangeCompensationScan UNALIGNED range bounds under rerange
-  *                              (`ts >= '..06:30'` against hour
-  *                              buckets): the window's complete interior
-  *                              buckets replay from the unbounded warm
-  *                              state as above, and the ≤ 2 partial EDGE
-  *                              slivers are answered by a bounded
-  *                              COMPENSATION SCAN — the original query
-  *                              filtered to the sliver ranges (below the
-  *                              twin's watermark), partially aggregated,
-  *                              unioned into the replayed state. Exact
-  *                              for every measure (the edge bucket's
-  *                              rows come only from the sliver scan +
-  *                              delta; the interior slice excludes that
-  *                              bucket). The warm scan is ≤ 2
-  *                              bucket-widths of fact — parquet min/max
-  *                              pruning applies to the pushed ts range —
-  *                              instead of the whole window on a plain
-  *                              miss. Fixed-width grains only (second/
-  *                              minute/hour/day/week); OFF restores the
-  *                              aligned-bounds-only behavior. ON by
-  *                              default; engages only on a miss and
-  *                              never changes answers.
-  * @param rehopFromTumblingState HOP subsumption: a SLIDING-window
-  *                              aggregate (`window(ts, '1 hour',
-  *                              '15 minutes')`) can, on an exact-
-  *                              fingerprint miss, answer from warm state
-  *                              of the same plan bucketed TUMBLING at
-  *                              the slide — each fine bucket lies inside
-  *                              exactly duration/slide hop windows, so
-  *                              the replay explodes state rows into
-  *                              their hops and the merge folds them.
-  *                              One tumbling state at the slide serves
-  *                              every hopping variant over it, instead
-  *                              of each variant maintaining state that
-  *                              multiplies every appended row ×n through
-  *                              Expand. Pinned to the analyzer's
-  *                              TimeWindowing plan shape; gap windows
-  *                              (slide > duration) and durations that
-  *                              are not slide multiples bail. ON by
-  *                              default; engages only on a miss and
-  *                              never changes answers.
-  * @param regroupFromDrilldownState GROUPING-SET subsumption: a
-  *                              rollup/cube/grouping-sets query can, on
-  *                              an exact-fingerprint miss, answer from
-  *                              warm state of the PLAIN drill-down over
-  *                              all its group columns — each grouping
-  *                              set is a merge-away of the full grain,
-  *                              so the replay re-expands every state
-  *                              row into the query's grouping sets
-  *                              (nulling the absent keys, synthesizing
-  *                              the grouping id) and the normal merge
-  *                              re-aggregates the subtotals, exactly
-  *                              how Spark itself computes rollups from
-  *                              raw rows — but over state rows instead
-  *                              of the fact table. The full-grain set
-  *                              need not even be among the query's sets
-  *                              (GROUPING SETS ((a),(b)) answers from
-  *                              warm (a,b) state). ON by default;
-  *                              engages only on a miss and never
-  *                              changes answers.
-  * @param factorizedJoinState   TWO-FACT join aggregates: an aggregate
-  *                              over an inner equi-join of two GROWING
-  *                              tables (no declared-static side) is
-  *                              decomposed into two per-side twin
-  *                              aggregates at (join key × side-pure
-  *                              group) grain — each twin is a plain
-  *                              single-table cacheable aggregate the
-  *                              normal machinery maintains incrementally
-  *                              under its own fingerprint and watermark —
-  *                              plus a state-sized combine join that
-  *                              multiplies counts/sums by the other
-  *                              side's multiplicity (eager aggregation
-  *                              applied to BOTH sides, Yan & Larson '95;
-  *                              the factorized-IVM idea of DBToaster).
-  *                              Appends to EITHER table are absorbed by
-  *                              that side's delta scan alone; the fact
-  *                              tables are never rescanned. Supported:
-  *                              inner / left-semi / left-anti and LEFT/
-  *                              RIGHT/FULL OUTER attr=attr equi-joins
-  *                              (the combine join carries the outer
-  *                              type: a state row without a partner
-  *                              survives null-extended, the missing
-  *                              side's count coalesces to multiplicity
-  *                              1, and the NULL state columns reproduce
-  *                              the vanilla null-extension — which
-  *                              requires bare-column grouping/measures
-  *                              and no filters on a null-extendable
-  *                              side), side-pure filters/grouping,
-  *                              side-pure count/sum/min/max/avg and
-  *                              count(DISTINCT col) measures (no
-  *                              cross-side measures) — anything else
-  *                              runs vanilla. ON by default; engages
-  *                              only after the single-state decision
-  *                              bails and never changes answers.
   * @param percentileSketchState ON (default): numeric percentile /
   *                              approx_percentile state past 4096
   *                              distinct values per group compresses
@@ -392,15 +206,7 @@ final case class QueryCacheConfig(
     dynamicBoundBucketGranularity: Boolean = false,
     temporalPartitionColumn: Option[String] = None,
     staticDimensionTables: Set[String] = Set.empty,
-    regrainFromFinerState: Boolean = true,
     redimDimensionColumns: Set[String] = Set.empty,
-    remeasureFromSupersetState: Boolean = true,
-    rejoinFromFactState: Boolean = true,
-    rerangeFromUnboundedState: Boolean = true,
-    rangeCompensationScan: Boolean = true,
-    rehopFromTumblingState: Boolean = true,
-    regroupFromDrilldownState: Boolean = true,
-    factorizedJoinState: Boolean = true,
     percentileSketchState: Boolean = true,
     lateRescanBandMicros: Option[Long] = None,
     /** internal bucketing grain for NO-GROUP-BY aggregates with a dynamic
@@ -423,13 +229,6 @@ final case class QueryCacheConfig(
       * FILTER clauses fine; DISTINCT and order-statistics fall back to
       * the plain keys-only path). date_trunc grains only. */
     temporalTwinGrain: Option[String] = None,
-    /** cache SIMPLE FILTER QUERIES (no aggregate) as materialized row
-      * state — reference README.md:130's first roadmap item. State = the
-      * query's own output rows at the watermark; a warm run unions the
-      * replayed rows with a pushed `ts >= wm` delta scan. Incremental
-      * materialized view over append-only sources; capacity-guarded like
-      * aggregate state. */
-    filterQueryState: Boolean = true,
     /** warm AGGREGATE commits go through the cache's O(append) chain
       * (putAppend of this run's group-grained delta partials) instead of
       * rewriting the whole merged state — on a durable cache a dashboard
@@ -441,7 +240,7 @@ final case class QueryCacheConfig(
       * chain) and banded runs full-put, which also compacts; the memory
       * cache does not chain (driver-held state, writes are cheap). */
     aggregateStateAppend: Boolean = true,
-    /** admission guard for COLD row-state puts (filterQueryState): the
+    /** admission guard for COLD row-state puts (filter-query row views): the
       * SUM of the chain's leaf relation sizes (source file bytes — an
       * upper bound for the admitted chain shapes, since filters and
       * projections only shrink and the star-join shape is fact-bounded)

@@ -41,9 +41,10 @@ import graft.rewrite.Decompose.Decomposed
   * logged (reference decision points, src/aggregate.rs:97-203).
   */
 final class IncrementalAggExecutor(val config: QueryCacheConfig) {
+  import IncrementalAggExecutor._
 
   /** Capture-mode fingerprint suffix, shared by the direct lookup and
-    * both subsumption probes: strict-mode state covers a different band
+    * every subsumption probe: strict-mode state covers a different band
     * (see decide), and exact-percentile mode (percentileSketchState=off)
     * must never warm-merge sketch-mode state — the two states share a
     * schema, so only the key can keep them apart. */
@@ -91,49 +92,31 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
   def rewritePlan(spark: SparkSession, analyzed: LogicalPlan): Option[LogicalPlan] = {
     phase("decide")(decide(analyzed)) match {
       case Left((fp, reason)) =>
-        // two-fact join aggregates: after the single-state decision bails,
-        // try the factorized decomposition (two per-side twin states plus
-        // a state-sized combine — see factorizedJoinRewrite)
-        val factorized =
-          if (config.factorizedJoinState)
-            try phase("factorized")(factorizedJoinRewrite(spark, analyzed))
-            catch {
-              case scala.util.control.NonFatal(e) =>
-                config.log.warn(fp,
-                  s"factorized join rewrite failed, running uncached: ${e.getMessage}")
-                None
-            }
-          else None
-        // no-GROUP-BY aggregate under a dynamic lower bound (reference
-        // README.md:132 TODO): bucket internally, bound over bucket
-        // starts, re-aggregate — see dynNoGroupRewrite
-        val dynNoGroup =
-          if (factorized.isEmpty && config.dynamicBoundBucketGranularity)
-            try phase("dyn-nogroup")(dynNoGroupRewrite(spark, analyzed))
-            catch {
-              case scala.util.control.NonFatal(e) =>
-                config.log.warn(fp,
-                  s"no-group dynamic bound rewrite failed, running uncached: ${e.getMessage}")
-                None
-            }
-          else None
-        // simple filter queries (reference README.md:130 TODO): cache
-        // the row result itself as an incremental materialized view
-        val filterRows =
-          if (factorized.isEmpty && dynNoGroup.isEmpty)
-            try phase("filter-rows")(filterQueryRewrite(spark, analyzed))
-            catch {
-              case e: CacheCapacityExceeded =>
-                config.log.warn(fp,
-                  s"row state too large, running uncached: ${e.getMessage}")
-                None
-              case scala.util.control.NonFatal(e) =>
-                config.log.warn(fp,
-                  s"filter-query rewrite failed, running uncached: ${e.getMessage}")
-                None
-            }
-          else None
-        val alt = factorized.orElse(dynNoGroup).orElse(filterRows)
+        // the single-state decision bailed: the alternative rewrites, in
+        // order, first answer wins —
+        //   factorized   two-fact join aggregates: two per-side twin states
+        //                plus a state-sized combine (factorizedJoinRewrite)
+        //   dyn-nogroup  a no-GROUP-BY aggregate under a dynamic lower bound
+        //                (reference README.md:132 TODO): bucket internally,
+        //                bound over bucket starts, re-aggregate
+        //   filter-rows  a simple filter query (reference README.md:130
+        //                TODO): the row result itself as an incremental
+        //                materialized view
+        val rewrites: Seq[(String, String, () => Option[LogicalPlan])] = Seq(
+          ("factorized", "factorized join", () => factorizedJoinRewrite(spark, analyzed)),
+          ("dyn-nogroup", "no-group dynamic bound", () => dynNoGroupRewrite(spark, analyzed)),
+          ("filter-rows", "filter-query", () => filterQueryRewrite(spark, analyzed)))
+        val alt = rewrites.iterator.map { case (tag, what, rewrite) =>
+          try phase(tag)(rewrite())
+          catch {
+            case e: CacheCapacityExceeded if tag == "filter-rows" =>
+              config.log.warn(fp, s"row state too large, running uncached: ${e.getMessage}")
+              None
+            case scala.util.control.NonFatal(e) =>
+              config.log.warn(fp, s"$what rewrite failed, running uncached: ${e.getMessage}")
+              None
+          }
+        }.collectFirst { case Some(plan) => plan }
         if (alt.isEmpty) config.log.info(fp, s"not caching: $reason")
         alt
       case Right(c) =>
@@ -167,6 +150,39 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
 
   // ---------------------------------------------------------------- decide
 
+  /** an output expression without its alias */
+  private def unalias(e: Expression): Expression = e match {
+    case Alias(child, _) => child
+    case other => other
+  }
+
+  /** Subqueries anywhere in a cached subtree's expressions make the entry
+    * unsound: a PlanExpression's deterministic flag ignores the nested
+    * plan's DATA, and its source tables are absent from the fingerprint —
+    * the watermark would never rescan them (parents ABOVE the aggregate
+    * are spliced back on top and re-run, so subqueries there remain
+    * fine). */
+  private def hasSubquery(es: Seq[Expression]): Boolean =
+    es.exists(_.exists(_.isInstanceOf[
+      org.apache.spark.sql.catalyst.expressions.PlanExpression[_]]))
+
+  /** A declared-static side: every leaf is a LocalRelation (immutable,
+    * content-fingerprinted) or a scan over declared tables, and every
+    * expression in the subtree is deterministic, subquery-free and free
+    * of now() leaves (a dim filtered by now() re-evaluates differently on
+    * the next run — not static in the sense the state needs). */
+  private def isStaticSide(side: LogicalPlan): Boolean = {
+    val leavesOk = side.collectLeaves().forall {
+      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => true
+      case l if Shims.isScanLeaf(l) =>
+        config.isDeclaredStatic(Shims.sourcePaths(l))
+      case _ => false
+    }
+    leavesOk && side.collect { case n => n }.forall(_.expressions.forall(e =>
+      e.deterministic && !hasSubquery(Seq(e)) &&
+        !graft.analysis.NowBounds.containsNow(e)))
+  }
+
   private def decide(analyzed: LogicalPlan): Either[(String, String), Cacheable] = {
     val aggs = analyzed.collect { case a: Aggregate => a }
     if (aggs.isEmpty) return Left(("-", "no aggregate in plan"))
@@ -186,14 +202,6 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
       Left((fp, msg))
     }
 
-    // subqueries anywhere in the cached subtree's expressions make the
-    // entry unsound: a PlanExpression's deterministic flag ignores the
-    // nested plan's DATA, and its source tables are absent from the
-    // fingerprint — the watermark would never rescan them (parents ABOVE
-    // the aggregate are spliced back on top and re-run, so subqueries
-    // there remain fine)
-    def hasSubquery(es: Seq[Expression]): Boolean =
-      es.exists(_.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.PlanExpression[_]]))
     if (hasSubquery(agg.aggregateExpressions) || hasSubquery(agg.groupingExpressions))
       return bail("subquery inside aggregate — not cacheable")
 
@@ -225,22 +233,6 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
     var dynamicBound: Option[Expression] = None
     var staticOutputs = org.apache.spark.sql.catalyst.expressions.AttributeSet.empty
     val staticUnionBranches = ArrayBuffer.empty[LogicalPlan]
-    // a declared-static side: every leaf is a LocalRelation (immutable,
-    // content-fingerprinted) or a scan over declared tables, and every
-    // expression in the subtree is deterministic, subquery-free and free
-    // of now() leaves (a dim filtered by now() re-evaluates differently
-    // on the next run — not static in the sense the state needs)
-    def isStaticSide(side: LogicalPlan): Boolean = {
-      val leavesOk = side.collectLeaves().forall {
-        case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => true
-        case l if Shims.isScanLeaf(l) =>
-          config.isDeclaredStatic(Shims.sourcePaths(l))
-        case _ => false
-      }
-      leavesOk && side.collect { case n => n }.forall(_.expressions.forall(e =>
-        e.deterministic && !hasSubquery(Seq(e)) &&
-          !graft.analysis.NowBounds.containsNow(e)))
-    }
     def walk(p: LogicalPlan): Unit = if (shapeErr.isEmpty) p match {
       case Filter(cond, child) =>
         Stability.find(cond, needles) match {
@@ -527,45 +519,11 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
         None
       case other => other
     }
-    // bucket-granular SUBSUMPTION: on an exact-fingerprint miss, a
-    // coarse temporal grain can replay the warm state of its FINER twin
-    // (day from hour): the regrained state re-aggregates through the
-    // normal merge below, and the put stores coarse-grain state under
-    // THIS fingerprint, so the next run hits directly.
-    val entry = direct
-      .orElse(
-        if (config.regrainFromFinerState) finerGrainState(c, stateSchema)
-        else None)
-      // range subsumption: an aligned time-window slice answered from
-      // the UNBOUNDED twin's warm state sliced on the bucket key
-      .orElse(rerangeBucketState(c, stateSchema))
-      // hop subsumption: a sliding-window aggregate answered from the
-      // tumbling-at-the-slide twin's warm state exploded into its hops
-      .orElse(rehopFromSlideState(c, stateSchema))
-      // tumbling-grain subsumption: a coarse tumbling window answered
-      // from a finer tumbling twin's warm state re-bucketed
-      .orElse(retumbleFromFinerState(c, stateSchema))
-      // re-spelling: a tumbling window answered from the date_trunc
-      // spelling's warm state re-keyed to window structs
-      .orElse(rewindowFromTruncState(c, stateSchema))
-      // grouping-set subsumption: a rollup/cube answered from the plain
-      // full-grain drill-down's warm state re-expanded per grouping set
-      .orElse(regroupFromDrilldownState(c, stateSchema))
-      // dimension subsumption: a roll-up answered from its drill-down's
-      // warm state by merging the extra key away (opt-in via
-      // config.redimDimensionColumns)
-      .orElse(supersetDimState(c, stateSchema))
-      // filter subsumption: an equality/IN slice on a declared dimension
-      // answered from the UNFILTERED drill-down's warm state — the state
-      // rows with matching dim keys are exactly this query's groups
-      .orElse(dimFilterState(c, stateSchema))
-      // join subsumption: a dim-attribute breakdown over a fact ⋈
-      // static-dim join answered from the fact query's join-key-grained
-      // warm state, re-joined to the dim
-      .orElse(rejoinFactState(c, stateSchema))
-      // measure subsumption: a subset-measure query answered by
-      // projecting the needed state columns out of a warm superset entry
-      .orElse(supersetMeasureState(c, stateSchema))
+    // SUBSUMPTION: on an exact-fingerprint miss, the probes answer from
+    // a warm twin's state (see IncrementalAggExecutor.composition); the
+    // put below then stores this query's state under THIS fingerprint,
+    // so the next run hits directly.
+    val entry = direct.orElse(composed(Query, c, stateSchema, 0))
 
     // ---- late re-scan band (closes S1's late-data miss within a declared
     // tolerance; see QueryCacheConfig.lateRescanBandMicros): lower the
@@ -914,7 +872,7 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
         // bounds and static union branches keep the plain cold scan
         // (their chain shape is not what the view stored).
         val mvSrc: Option[DataFrame] =
-          if (config.filterQueryState && c.dynamicBound.isEmpty &&
+          if (c.dynamicBound.isEmpty &&
               c.staticUnionBranches.isEmpty) {
             // rowViewLookup probes the exact row fingerprint AND the
             // refilter lattice: a cold aggregate whose chain adds a
@@ -981,7 +939,7 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
     // measure-index row recorded BEFORE the put so a durable cache can
     // persist it in the same meta commit (ParquetQueryCache reads the
     // recorded row inside put)
-    if (config.remeasureFromSupersetState) phase("put.recordMeasures")(
+    phase("put.recordMeasures")(
       config.cache.recordMeasures(c.fingerprint, baseFingerprint(c.agg),
         measureRows(c)))
     // confs go on a CLONED session (never mutate the user's session —
@@ -1059,13 +1017,8 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
         case _ => e.withNewChildren(e.children.map(rewrite))
       }
     }
-    val outCols: Seq[Column] = c.agg.aggregateExpressions.map { o =>
-      val core = o match {
-        case Alias(child, _) => child
-        case other => other
-      }
-      Shims.column(rewrite(core)).as(o.name)
-    }
+    val outCols: Seq[Column] = c.agg.aggregateExpressions.map(o =>
+      Shims.column(rewrite(unalias(o))).as(o.name))
     // answer-time dynamic bound: temporal col -> its bucket column, now()
     // leaves -> this run's frozen timestamp (Catalyst's ComputeCurrentTime
     // trick applied by hand). Bucket-granularity semantics: a bucket
@@ -1112,6 +1065,49 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
     analyzed.transformUp {
       case n if n eq c.agg => marked
     }
+  }
+
+  // ------------------------------------------- subsumption composition
+
+  /** Twin-state fetch for subsumption probes: an entry with PENDING
+    * repair ranges (cache.repairRange — a declared historical rewrite)
+    * still holds pre-rewrite rows. Only its own exact-fingerprint run may
+    * replay it, because that run applies the repair in-flight; a probe
+    * replaying it into ANOTHER query's state would bake the stale rows
+    * in. Probes therefore treat it as absent (the repair check runs only
+    * after the state exists — most probes miss and pay nothing). */
+  private def twinState(fp2: String): Option[graft.cache.CachedState] =
+    config.cache.get(fp2).filter(_ =>
+      config.cache.pendingRepairs(fp2).isEmpty)
+
+  /** A subsumption probe's lookup of the twin plan (fingerprint `fp`)
+    * it built: the twin's own warm state, else — lazily, in table order,
+    * stopping at the first hit — the probes [[composition]] lists after
+    * `from`, applied to the twin. */
+  private def lookupTwin(from: Probe, fp: String, cTwin: Cacheable,
+      schema: StructType, depth: Int): Option[graft.cache.CachedState] =
+    twinState(fp).filter(cs => schemaCompatible(cs.schema, schema))
+      .orElse(composed(from, cTwin, schema, depth))
+
+  private def composed(from: Site, c: Cacheable, schema: StructType,
+      depth: Int): Option[graft.cache.CachedState] = {
+    val (probes, next) = composition(from, depth)
+    probes.iterator.map(probe(_, c, schema, next))
+      .collectFirst { case Some(cs) => cs }
+  }
+
+  private def probe(p: Probe, c: Cacheable, schema: StructType,
+      depth: Int): Option[graft.cache.CachedState] = p match {
+    case Regrain => finerGrainState(c, schema)
+    case Redim => supersetDimState(c, schema, depth)
+    case Refilter => dimFilterState(c, schema, depth)
+    case Rerange => rerangeBucketState(c, schema, depth)
+    case Rehop => rehopFromSlideState(c, schema)
+    case Retumble => retumbleFromFinerState(c, schema)
+    case Rewindow => rewindowFromTruncState(c, schema)
+    case Regroup => regroupFromDrilldownState(c, schema)
+    case Rejoin => rejoinFactState(c, schema)
+    case Remeasure => supersetMeasureState(c, schema)
   }
 
   // ------------------------------------------------ grain subsumption
@@ -1181,19 +1177,20 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
       // silently change answers.
       var total = 0
       c.agg.foreach(node => node.expressions.foreach(e => total += matchesIn(e)))
-      def safeInOutput(e: Expression): Int =
-        if (e.semanticEquals(groupKey)) matchesIn(e)
-        else e match {
-          // replay maps a whole AggregateExpression to a finalizer over
-          // stored state — a trunc INSIDE one is never re-truncated
-          case _: AggregateExpression => 0
-          case _ => e.children.map(safeInOutput).sum
-        }
-      var safe = matchesIn(groupKey)
-      c.agg.aggregateExpressions.foreach { o =>
-        val core = o match { case Alias(ch, _) => ch; case x => x }
-        safe += safeInOutput(core)
+      // `count` summed over the compensated sites: the grouping-list key
+      // and output subtrees equal to it. Replay maps a whole
+      // AggregateExpression to a finalizer over stored state — a site
+      // INSIDE one is never re-truncated.
+      def compensated(count: Expression => Int): Int = {
+        def inOutput(e: Expression): Int =
+          if (e.semanticEquals(groupKey)) count(e)
+          else e match {
+            case _: AggregateExpression => 0
+            case _ => e.children.map(inOutput).sum
+          }
+        count(groupKey) + c.agg.aggregateExpressions.map(o => inOutput(unalias(o))).sum
       }
+      var safe = compensated(matchesIn)
       var attrLeak = false
       groupKey match {
         case a: Attribute if !(groupExpr eq groupKey) =>
@@ -1203,28 +1200,12 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
           // twin's DEFINITION changed underneath every such use and replay
           // does not re-truncate them.
           safe += matchesIn(groupExpr)
-          var attrTotal = 0
-          c.agg.expressions.foreach(_.foreach {
-            case x: Attribute if x.semanticEquals(a) => attrTotal += 1
-            case _ => ()
-          })
           def attrIn(e: Expression): Int = {
             var n = 0
             e.foreach { case x: Attribute if x.semanticEquals(a) => n += 1; case _ => () }
             n
           }
-          def attrSafeInOutput(e: Expression): Int =
-            if (e.semanticEquals(groupKey)) attrIn(e)
-            else e match {
-              case _: AggregateExpression => 0
-              case _ => e.children.map(attrSafeInOutput).sum
-            }
-          var attrSafe = attrIn(groupKey) // the grouping-list occurrence
-          c.agg.aggregateExpressions.foreach { o =>
-            val core = o match { case Alias(ch, _) => ch; case x => x }
-            attrSafe += attrSafeInOutput(core)
-          }
-          attrLeak = attrTotal != attrSafe
+          attrLeak = c.agg.expressions.map(attrIn).sum != compensated(attrIn)
         case _ => ()
       }
       if (total != safe || safe == 0 || attrLeak) {
@@ -1248,12 +1229,7 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
         if (!changed) None
         else {
           val fp2 = Fingerprint.of(subAgg) + fpSuffix
-          twinState(fp2)
-            .filter(cs => schemaCompatible(cs.schema, stateSchema))
-            // composes with measure subsumption: the finer twin may exist
-            // only as a measure-superset entry — project its columns
-            // first, then re-truncate like any regrain hit
-            .orElse(supersetMeasureState(c.copy(agg = subAgg), stateSchema))
+          lookupTwin(Regrain, fp2, c.copy(agg = subAgg), stateSchema, 0)
             .map { cs =>
               config.log.info(c.fingerprint,
                 s"regrain hit: replaying $finer-grain state " +
@@ -1283,69 +1259,52 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
     * supersets are probed (a two-extra-key drill-down's fingerprint
     * won't match any one-insertion twin). */
   private def supersetDimState(c: Cacheable, stateSchema: StructType,
-      depth: Int = 0): Option[graft.cache.CachedState] = {
+      depth: Int): Option[graft.cache.CachedState] = {
     // probe-chain cap: each level appends one declared dim (or strips one
     // conjunct), so the space is permutations of the declared set —
     // bounded here so a large declaration can't make a miss expensive
     if (config.redimDimensionColumns.isEmpty || depth >= 3) return None
-    // canonical groupBy().agg() output shape: grouping outputs first —
-    // the superset twin inserts the dimension right after them
-    val prefix = c.agg.aggregateExpressions.takeWhile { o =>
-      val core = o match { case Alias(ch, _) => ch; case x => x }
-      c.agg.groupingExpressions.exists(_.semanticEquals(core))
-    }.length
     val dims = c.agg.child.output.filter(a =>
       config.redimDimensionColumns.exists(_.equalsIgnoreCase(a.name)) &&
         !c.agg.groupingExpressions.exists(_.references.contains(a)))
+    dims.view.flatMap { attr =>
+      extraKeyTwin(Redim, c, stateSchema, depth, attr, c.agg.child,
+          (df, _) => df) { fp2 =>
+        s"redim hit: replaying (${attr.name})-keyed superset state " +
+          s"$fp2 merged down"
+      }
+    }.headOption
+  }
+
+  /** Redim's and refilter's twin: `c`'s plan over `child`, grouped by one
+    * more key `attr` — inserted right after the grouping outputs (the
+    * canonical groupBy().agg() shape), so its state is this plan's state
+    * with `_g<n>` inserted after the group columns. On a hit, `keep`
+    * slices the state on that key column, which is then dropped: the
+    * merge folds the key's groups together. */
+  private def extraKeyTwin(from: Probe, c: Cacheable, stateSchema: StructType,
+      depth: Int, attr: Attribute, child: LogicalPlan,
+      keep: (DataFrame, Column) => DataFrame)(hitMsg: String => String)
+      : Option[graft.cache.CachedState] = {
+    val prefix = c.agg.aggregateExpressions.takeWhile(o =>
+      c.agg.groupingExpressions.exists(_.semanticEquals(unalias(o)))).length
     val nGroup = c.agg.groupingExpressions.length
     val gExtra = s"_g$nGroup"
-    dims.view.flatMap { attr =>
-      val twin = c.agg.copy(
-        groupingExpressions = c.agg.groupingExpressions :+ attr,
-        aggregateExpressions =
-          (c.agg.aggregateExpressions.take(prefix) :+ attr) ++
-            c.agg.aggregateExpressions.drop(prefix))
-      val fp2 = Fingerprint.of(twin) + fpSuffix
-      // the twin's state = this plan's state with the dim key inserted
-      // right after the existing group columns
-      val twinSchema = StructType(
-        (stateSchema.take(nGroup) :+
-          org.apache.spark.sql.types.StructField(gExtra, attr.dataType)) ++
-          stateSchema.drop(nGroup))
-      twinState(fp2)
-        .filter(cs => schemaCompatible(cs.schema, twinSchema))
-        // COMPOSED subsumption: no warm drill-down at THIS grain — try
-        // the drill-down's FINER-GRAIN twin (day-only ← warm (hour, dim)
-        // state: regrain re-truncates the bucket, then the dim key
-        // merges away below — each step is the same state re-aggregation
-        // the warm merge performs, so the composition is sound)
-        .orElse(
-          if (config.regrainFromFinerState)
-            finerGrainState(c.copy(agg = twin), twinSchema)
-          else None)
-        // RECURSIVE subsumption: no warm single-dim drill-down — probe
-        // its own superset (two or more extra dims, e.g. hour-only from
-        // warm (hour, service, region)). The recursive result already
-        // merged the deeper keys away, so it reads as the twin's state;
-        // termination: each level grooms one more declared dim and the
-        // candidate list excludes already-grouped ones.
-        .orElse(supersetDimState(c.copy(agg = twin), twinSchema, depth + 1))
-        // and with range subsumption: the drill-down may be warm only
-        // as the UNBOUNDED twin of a time-window slice
-        .orElse(rerangeBucketState(c.copy(agg = twin), twinSchema, depth + 1))
-        // composes with measure subsumption: the drill-down may exist
-        // only as a measure-superset entry — project, then merge the
-        // dim key away below
-        .orElse(supersetMeasureState(c.copy(agg = twin), twinSchema))
-        .map { cs =>
-          config.log.info(c.fingerprint,
-            s"redim hit: replaying (${attr.name})-keyed superset state " +
-              s"${fp2.take(12)} merged down")
-          graft.cache.CachedState(cs.timestampMicros,
-            StructType(cs.schema.filterNot(_.name == gExtra)),
-            s => cs.read(s).drop(gExtra))
-        }
-    }.headOption
+    val twin = c.agg.copy(
+      groupingExpressions = c.agg.groupingExpressions :+ attr,
+      aggregateExpressions = (c.agg.aggregateExpressions.take(prefix) :+ attr) ++
+        c.agg.aggregateExpressions.drop(prefix),
+      child = child)
+    val fp2 = Fingerprint.of(twin) + fpSuffix
+    val twinSchema = StructType((stateSchema.take(nGroup) :+
+      org.apache.spark.sql.types.StructField(gExtra, attr.dataType)) ++
+      stateSchema.drop(nGroup))
+    lookupTwin(from, fp2, c.copy(agg = twin), twinSchema, depth).map { cs =>
+      config.log.info(c.fingerprint, hitMsg(fp2.take(12)))
+      graft.cache.CachedState(cs.timestampMicros,
+        StructType(cs.schema.filterNot(_.name == gExtra)),
+        s => keep(cs.read(s), col(gExtra)).drop(gExtra))
+    }
   }
 
   /** On an exact-fingerprint miss: a query whose filter carries an
@@ -1366,7 +1325,7 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
     * match), so candidates sourced from a declared-static side are
     * skipped whenever the plan contains an outer join. */
   private def dimFilterState(c: Cacheable, stateSchema: StructType,
-      depth: Int = 0): Option[graft.cache.CachedState] = {
+      depth: Int): Option[graft.cache.CachedState] = {
     import org.apache.spark.sql.catalyst.expressions.{
       EqualNullSafe, EqualTo, In, Literal}
     import org.apache.spark.sql.catalyst.plans.{Cross, Inner, LeftAnti, LeftSemi}
@@ -1408,54 +1367,14 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
       }
       case _ => ()
     }
-    val prefix = c.agg.aggregateExpressions.takeWhile { o =>
-      val core = o match { case Alias(ch, _) => ch; case x => x }
-      c.agg.groupingExpressions.exists(_.semanticEquals(core))
-    }.length
-    val nGroup = c.agg.groupingExpressions.length
-    val gExtra = s"_g$nGroup"
     cands.view.flatMap { case (cj, attr, vals) =>
-      val twin = c.agg.copy(
-        groupingExpressions = c.agg.groupingExpressions :+ attr,
-        aggregateExpressions =
-          (c.agg.aggregateExpressions.take(prefix) :+ attr) ++
-            c.agg.aggregateExpressions.drop(prefix),
-        child = stripConjunct(c.agg.child, cj))
-      val fp2 = Fingerprint.of(twin) + fpSuffix
-      val twinSchema = StructType(
-        (stateSchema.take(nGroup) :+
-          org.apache.spark.sql.types.StructField(gExtra, attr.dataType)) ++
-          stateSchema.drop(nGroup))
-      twinState(fp2)
-        .filter(cs => schemaCompatible(cs.schema, twinSchema))
-        // composes with grain subsumption exactly like redim: no warm
-        // drill-down at this grain — try its finer-grain twin
-        .orElse(
-          if (config.regrainFromFinerState)
-            finerGrainState(c.copy(agg = twin), twinSchema)
-          else None)
-        // composes with dimension subsumption (slice answered from a
-        // DEEPER drill-down, e.g. WHERE service='x' GROUP BY hour from
-        // warm (hour, service, region) state) and with itself (a second
-        // sliced dimension strips its conjunct at the next level)
-        .orElse(supersetDimState(c.copy(agg = twin), twinSchema, depth + 1))
-        .orElse(dimFilterState(c.copy(agg = twin), twinSchema, depth + 1))
-        // and with range subsumption: the unfiltered drill-down may be
-        // warm only as the UNBOUNDED twin of a time-window slice
-        .orElse(rerangeBucketState(c.copy(agg = twin), twinSchema, depth + 1))
-        // and with measure subsumption: the unfiltered drill-down may
-        // exist only as a measure-superset entry
-        .orElse(supersetMeasureState(c.copy(agg = twin), twinSchema))
-        .map { cs =>
-          config.log.info(c.fingerprint,
-            s"refilter hit: replaying (${attr.name})-keyed unfiltered state " +
-              s"${fp2.take(12)} sliced to ${vals.length} value(s)")
-          val pred = vals.map(v => col(gExtra) === Shims.column(v))
-            .reduce(_ || _)
-          graft.cache.CachedState(cs.timestampMicros,
-            StructType(cs.schema.filterNot(_.name == gExtra)),
-            s => cs.read(s).filter(pred).drop(gExtra))
-        }
+      extraKeyTwin(Refilter, c, stateSchema, depth, attr,
+          stripConjunct(c.agg.child, cj),
+          (df, key) => df.filter(vals.map(v => key === Shims.column(v))
+            .reduce(_ || _))) { fp2 =>
+        s"refilter hit: replaying (${attr.name})-keyed unfiltered state " +
+          s"$fp2 sliced to ${vals.length} value(s)"
+      }
     }.headOption
   }
 
@@ -1481,10 +1400,10 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
     * (`ts > v` ≡ `ts >= v+1µs`, `ts <= v` ≡ `ts < v+1µs`), so BETWEEN
     * slices too.
     *
-    * UNALIGNED bounds (config.rangeCompensationScan, default on): a
-    * bound inside a bucket splits the window into complete INTERIOR
-    * buckets — answered from the sliced state as above — plus at most
-    * two partial EDGE SLIVERS, answered by a bounded compensation scan:
+    * UNALIGNED bounds: a bound inside a bucket splits the window into
+    * complete INTERIOR buckets — answered from the sliced state as
+    * above — plus at most two partial EDGE SLIVERS, answered by a
+    * bounded compensation scan:
     * the original child filtered to the sliver range (and below the
     * twin's watermark), partially aggregated, and unioned into the
     * replayed state. The edge bucket's group key truncates sliver rows
@@ -1519,17 +1438,6 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
       case _ => None
     }
   }
-
-  /** Twin-state fetch for subsumption probes: an entry with PENDING
-    * repair ranges (cache.repairRange — a declared historical rewrite)
-    * still holds pre-rewrite rows. Only its own exact-fingerprint run may
-    * replay it, because that run applies the repair in-flight; a probe
-    * replaying it into ANOTHER query's state would bake the stale rows
-    * in. Probes therefore treat it as absent (the repair check runs only
-    * after the state exists — most probes miss and pay nothing). */
-  private def twinState(fp2: String): Option[graft.cache.CachedState] =
-    config.cache.get(fp2).filter(_ =>
-      config.cache.pendingRepairs(fp2).isEmpty)
 
   /** Bucket-aligned repair spans for a set of declared rewrite ranges:
     * (state bucket-key path, per-range [dropLo, scanHi) in micros), both
@@ -1956,10 +1864,10 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
   }
 
   private def rerangeBucketState(c: Cacheable, stateSchema: StructType,
-      depth: Int = 0): Option[graft.cache.CachedState] = {
+      depth: Int): Option[graft.cache.CachedState] = {
     import org.apache.spark.sql.catalyst.expressions.{
       GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal}
-    if (!config.rerangeFromUnboundedState || depth >= 3) return None
+    if (depth >= 3) return None
     val (gIdx, trunc) = temporalBucketTrunc(c).getOrElse(return None)
     if (c.agg.child.exists(_.isInstanceOf[Expand])) return None
     val tDt = c.temporalAttr.dataType
@@ -2042,7 +1950,6 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
     val iL: Option[Long] = rowL match {
       case Some(l) if aligned(l) => Some(l)
       case Some(l) =>
-        if (!config.rangeCompensationScan) return None
         val nb = truncOf(l).flatMap(nextBucketStart).getOrElse(return None)
         sliverRanges += ((l, math.min(nb, rowU.getOrElse(nb))))
         Some(nb)
@@ -2051,7 +1958,6 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
     val iU: Option[Long] = rowU match {
       case Some(u) if aligned(u) => Some(u)
       case Some(u) =>
-        if (!config.rangeCompensationScan) return None
         val fb = truncOf(u).getOrElse(return None)
         sliverRanges += ((math.max(fb, rowL.getOrElse(fb)), u))
         Some(fb)
@@ -2074,18 +1980,7 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
     val gName = s"_g$gIdx"
     val pred = (iL.map(l => col(gName) >= Shims.column(Literal(l, tDt))).toSeq ++
       iU.map(u => col(gName) < Shims.column(Literal(u, tDt)))).reduce(_ && _)
-    twinState(fp2)
-      .filter(cs => schemaCompatible(cs.schema, stateSchema))
-      // composes with the rest of the family: the unbounded twin may be
-      // warm only at a finer grain, as a drill-down, behind another
-      // strippable dim conjunct, or as a measure-superset entry
-      .orElse(
-        if (config.regrainFromFinerState)
-          finerGrainState(c.copy(agg = twin), stateSchema)
-        else None)
-      .orElse(supersetDimState(c.copy(agg = twin), stateSchema, depth + 1))
-      .orElse(dimFilterState(c.copy(agg = twin), stateSchema, depth + 1))
-      .orElse(supersetMeasureState(c.copy(agg = twin), stateSchema))
+    lookupTwin(Rerange, fp2, c.copy(agg = twin), stateSchema, depth)
       .map { cs =>
         config.log.info(c.fingerprint,
           s"rerange hit: replaying unbounded state ${fp2.take(12)} sliced " +
@@ -2150,6 +2045,15 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
 
   // ------------------------------------------------- hop subsumption
 
+  /** the analyzer's window struct type: (start, end) timestamps */
+  private def isWindowStruct(dt: org.apache.spark.sql.types.DataType): Boolean =
+    dt match {
+      case org.apache.spark.sql.types.StructType(fs) =>
+        fs.length == 2 && fs(0).name == "start" && fs(1).name == "end" &&
+          fs.forall(_.dataType == TimestampType)
+      case _ => false
+    }
+
   /** On an exact-fingerprint miss: a SLIDING-window aggregate
     * (`window(ts, '1 hour', '15 minutes')`) can be answered from the warm
     * state of the same plan bucketed TUMBLING at the slide
@@ -2177,18 +2081,10 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
       : Option[graft.cache.CachedState] = {
     import org.apache.spark.sql.catalyst.expressions.{IsNotNull, Literal}
     import org.apache.spark.sql.types.LongType
-    if (!config.rehopFromTumblingState) return None
     val (cond, ex) = c.agg.child match {
       case Filter(f, e: Expand) => (f, e)
       case _ => return None
     }
-    def isWindowStruct(dt: org.apache.spark.sql.types.DataType): Boolean =
-      dt match {
-        case org.apache.spark.sql.types.StructType(fs) =>
-          fs.length == 2 && fs(0).name == "start" && fs(1).name == "end" &&
-            fs.forall(_.dataType == TimestampType)
-        case _ => false
-      }
     val windowAttr = ex.output.headOption.collect {
       case a: Attribute if isWindowStruct(a.dataType) => a
     }.getOrElse(return None)
@@ -2272,16 +2168,7 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
     val twin = c.agg.copy(child = Project(alias +: ex.child.output,
       Filter(IsNotNull(c.temporalAttr), ex.child)))
     val fp2 = Fingerprint.of(twin) + fpSuffix
-    twinState(fp2)
-      .filter(cs => schemaCompatible(cs.schema, stateSchema))
-      // composes: the tumbling twin may be warm only as a drill-down,
-      // behind a strippable dim conjunct, as a measure-superset entry —
-      // or at a FINER tumbling grain (a 1h/15m hop whose 15m twin is
-      // cold still answers from warm 5m tumbling state, two levels deep)
-      .orElse(supersetDimState(c.copy(agg = twin), stateSchema))
-      .orElse(dimFilterState(c.copy(agg = twin), stateSchema))
-      .orElse(supersetMeasureState(c.copy(agg = twin), stateSchema))
-      .orElse(retumbleFromFinerState(c.copy(agg = twin), stateSchema))
+    lookupTwin(Rehop, fp2, c.copy(agg = twin), stateSchema, 0)
       .map { cs =>
         config.log.info(c.fingerprint,
           s"rehop hit: replaying ${slide}µs tumbling state ${fp2.take(12)} " +
@@ -2303,31 +2190,6 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
 
   // ------------------------------------- tumbling-grain subsumption
 
-  /** On an exact-fingerprint miss: a TUMBLING-window aggregate
-    * (`window(ts, '1 hour')`) can be answered from the warm state of
-    * the same plan tumbling at a FINER duration that divides it
-    * (`window(ts, '15 minutes')`) — the window-bucket analog of
-    * [[finerGrainState]] (which only covers date_trunc grains) and the
-    * converse of [[rehopFromSlideState]]'s tumbling twin. With the
-    * default epoch-aligned start, every fine bucket lies inside exactly
-    * one coarse bucket, so the replay re-buckets each fine state row
-    * (start → start − start mod D, the same arithmetic the analyzer's
-    * own bucketing uses) and the normal merge re-aggregates — exact by
-    * the state-merge contract (the coarse group's row multiset is the
-    * union of its nested fine buckets').
-    *
-    * Detection is pinned to the analyzer's tumbling TimeWindowing
-    * shape: Project(windowStruct alias +: pass-through child output,
-    * Filter(isnotnull(ts), child)), one bucketing Remainder literal D,
-    * and every long literal in the struct ∈ {0, D} — a custom
-    * startTime bails to a plain miss. A fixed ladder of finer
-    * durations dividing D probes coarsest-first (fewest state rows to
-    * merge). Derives the window group index structurally (not from
-    * temporalGroupIdx) so [[rehopFromSlideState]] can compose through
-    * it: a 1h/15m hopping query whose 15m tumbling twin is cold still
-    * answers from warm 5m tumbling state. Gated by the same
-    * regrainFromFinerState flag — it IS temporal grain subsumption,
-    * for window buckets. */
   /** The analyzer's tumbling TimeWindowing plan shape, structurally
     * verified: Project(windowStruct alias +: pass-through child output,
     * Filter(isnotnull(ts), child)), one bucketing Remainder literal D,
@@ -2346,13 +2208,6 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
       case Project((al: Alias) +: tail, f: Filter) => (al, tail, f)
       case _ => return None
     }
-    def isWindowStruct(dt: org.apache.spark.sql.types.DataType): Boolean =
-      dt match {
-        case org.apache.spark.sql.types.StructType(fs) =>
-          fs.length == 2 && fs(0).name == "start" && fs(1).name == "end" &&
-            fs.forall(_.dataType == TimestampType)
-        case _ => false
-      }
     if (!isWindowStruct(wAlias.dataType)) return None
     val gIdx = c.agg.groupingExpressions.indexWhere {
       case a: Attribute => a.exprId == wAlias.exprId
@@ -2397,11 +2252,33 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
     Some(TumblingShape(wAlias, rest, flt, gIdx, d, startUs))
   }
 
+  /** On an exact-fingerprint miss: a TUMBLING-window aggregate
+    * (`window(ts, '1 hour')`) can be answered from the warm state of
+    * the same plan tumbling at a FINER duration that divides it
+    * (`window(ts, '15 minutes')`) — the window-bucket analog of
+    * [[finerGrainState]] (which only covers date_trunc grains) and the
+    * converse of [[rehopFromSlideState]]'s tumbling twin. With the
+    * default epoch-aligned start, every fine bucket lies inside exactly
+    * one coarse bucket, so the replay re-buckets each fine state row
+    * (start → start − start mod D, the same arithmetic the analyzer's
+    * own bucketing uses) and the normal merge re-aggregates — exact by
+    * the state-merge contract (the coarse group's row multiset is the
+    * union of its nested fine buckets').
+    *
+    * Detection is pinned to the analyzer's tumbling TimeWindowing
+    * shape: Project(windowStruct alias +: pass-through child output,
+    * Filter(isnotnull(ts), child)), one bucketing Remainder literal D,
+    * and every long literal in the struct ∈ {0, D} — a custom
+    * startTime bails to a plain miss. A fixed ladder of finer
+    * durations dividing D probes coarsest-first (fewest state rows to
+    * merge). Derives the window group index structurally (not from
+    * temporalGroupIdx) so [[rehopFromSlideState]] can compose through
+    * it: a 1h/15m hopping query whose 15m tumbling twin is cold still
+    * answers from warm 5m tumbling state. */
   private def retumbleFromFinerState(c: Cacheable, stateSchema: StructType)
       : Option[graft.cache.CachedState] = {
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.types.LongType
-    if (!config.regrainFromFinerState) return None
     val TumblingShape(wAlias, rest, flt, gIdx, d, startUs) =
       tumblingShape(c).getOrElse(return None)
     // the divisor-ladder nesting argument assumes epoch-aligned windows;
@@ -2418,14 +2295,7 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
       val twinAlias = Alias(fineStruct, wAlias.name)(exprId = wAlias.exprId)
       val twin = c.agg.copy(child = Project(twinAlias +: rest, flt))
       val fp2 = Fingerprint.of(twin) + fpSuffix
-      twinState(fp2)
-        .filter(cs => schemaCompatible(cs.schema, stateSchema))
-        // composes: the fine tumbling twin may be warm only as a
-        // drill-down, behind a strippable dim conjunct, or as a
-        // measure-superset entry
-        .orElse(supersetDimState(c.copy(agg = twin), stateSchema))
-        .orElse(dimFilterState(c.copy(agg = twin), stateSchema))
-        .orElse(supersetMeasureState(c.copy(agg = twin), stateSchema))
+      lookupTwin(Retumble, fp2, c.copy(agg = twin), stateSchema, 0)
         .map { cs =>
           config.log.info(c.fingerprint,
             s"retumble hit: replaying ${f}µs tumbling state ${fp2.take(12)} " +
@@ -2467,13 +2337,10 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
     * date_trunc query. Composes with grain subsumption: the hour-trunc
     * twin may be warm only at MINUTE grain, and regrain lifts it first
     * (pinned in the spec). Both literal casings probe (the fingerprint
-    * keeps literal case, regrain precedent). Gated by
-    * regrainFromFinerState — it is the same one-temporal-state-serves-
-    * many-spellings family. */
+    * keeps literal case, regrain precedent). */
   private def rewindowFromTruncState(c: Cacheable, stateSchema: StructType)
       : Option[graft.cache.CachedState] = {
     import org.apache.spark.sql.catalyst.expressions.{Literal, TruncTimestamp}
-    if (!config.regrainFromFinerState) return None
     val TumblingShape(wAlias, _, flt, gIdx, d, startUs) =
       tumblingShape(c).getOrElse(return None)
     // calendar-grain equivalents. Epoch-anchored (startTime = 0):
@@ -2516,14 +2383,7 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
       // twin's group AT gIdx is a real date_trunc — set the index so
       // grain subsumption can lift a finer-grain entry for it
       val cTwin = c.copy(agg = twin, temporalGroupIdx = Some(gIdx))
-      twinState(fp2)
-        .filter(cs => schemaCompatible(cs.schema, twinSchema))
-        // composes: the trunc twin may be warm only at a finer grain,
-        // as a drill-down, behind a dim conjunct, or as a superset panel
-        .orElse(finerGrainState(cTwin, twinSchema))
-        .orElse(supersetDimState(cTwin, twinSchema))
-        .orElse(dimFilterState(cTwin, twinSchema))
-        .orElse(supersetMeasureState(cTwin, twinSchema))
+      lookupTwin(Rewindow, fp2, cTwin, twinSchema, 0)
         .map { cs =>
           config.log.info(c.fingerprint,
             s"rewindow hit: replaying date_trunc('$f') state ${fp2.take(12)} " +
@@ -2564,7 +2424,6 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
   private def regroupFromDrilldownState(c: Cacheable, stateSchema: StructType)
       : Option[graft.cache.CachedState] = {
     import org.apache.spark.sql.catalyst.expressions.Literal
-    if (!config.regroupFromDrilldownState) return None
     if (c.dynamicBound.isDefined) return None
     val ex = c.agg.child match {
       case e: Expand => e
@@ -2644,13 +2503,7 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
       keyGroups.zipWithIndex.map { case ((j, _), m) =>
         stateSchema(s"_g$j").copy(name = s"_g$m")
       } ++ stateSchema.fields.filterNot(_.name.startsWith("_g")))
-    twinState(fp2)
-      .filter(cs => schemaCompatible(cs.schema, twinStateSchema))
-      // composes: the drill-down may be warm only as a deeper drill-down,
-      // behind a strippable dim conjunct, or as a measure-superset entry
-      .orElse(supersetDimState(c.copy(agg = twin), twinStateSchema))
-      .orElse(dimFilterState(c.copy(agg = twin), twinStateSchema))
-      .orElse(supersetMeasureState(c.copy(agg = twin), twinStateSchema))
+    lookupTwin(Regroup, fp2, c.copy(agg = twin), twinStateSchema, 0)
       .map { cs =>
         config.log.info(c.fingerprint,
           s"regroup hit: replaying drill-down state ${fp2.take(12)} " +
@@ -2723,7 +2576,7 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
     * and two state-sized combines (pinned in IncrementalAggSpec). */
   private def factorizedJoinRewrite(spark: SparkSession,
       analyzed: LogicalPlan): Option[LogicalPlan] = {
-    import org.apache.spark.sql.catalyst.expressions.{Cast, EqualTo}
+    import org.apache.spark.sql.catalyst.expressions.EqualTo
     import org.apache.spark.sql.catalyst.expressions.aggregate.{
       Average, Count, Max, Min, Sum}
     import org.apache.spark.sql.functions.{coalesce, when, count => fcount,
@@ -2737,8 +2590,6 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
       config.log.info(fp, s"factorized join bail: $msg")
       None
     }
-    def hasSub(es: Seq[Expression]): Boolean = es.exists(_.exists(
-      _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.PlanExpression[_]]))
 
     // peel Filter / Project wrappers down to the join. Alias-bearing
     // Projects (the optimizer pulls grouping expressions out as
@@ -2769,12 +2620,12 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
       aliasMaps.foldLeft(e)((ex, m) => ex.transformUp {
         case a: Attribute if m.contains(a.exprId) => m(a.exprId)
       })
-    if (!agg.expressions.forall(_.deterministic) || hasSub(agg.expressions))
+    if (!agg.expressions.forall(_.deterministic) || hasSubquery(agg.expressions))
       return bail("non-deterministic or subquery aggregate expression")
-    if (!j.condition.forall(_.deterministic) || hasSub(j.condition.toSeq) ||
+    if (!j.condition.forall(_.deterministic) || hasSubquery(j.condition.toSeq) ||
         j.condition.exists(graft.analysis.NowBounds.containsNow))
       return bail("join condition not run-stable")
-    if (filterConjs.exists(c => !c.deterministic || hasSub(Seq(c))))
+    if (filterConjs.exists(c => !c.deterministic || hasSubquery(Seq(c))))
       return bail("non-deterministic or subquery filter")
 
     val leftOut = j.left.outputSet
@@ -2965,7 +2816,7 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
       val filtSide: Option[Boolean] = ae.filter match {
         case None => None
         case Some(p) =>
-          if (!p.deterministic || hasSub(Seq(p)))
+          if (!p.deterministic || hasSubquery(Seq(p)))
             return bail(s"non-deterministic or subquery FILTER: ${ae.sql}")
           val sd = sideOf(p).getOrElse(
             return bail(s"FILTER predicate references both sides: ${ae.sql}"))
@@ -3143,7 +2994,7 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
           // Decimal input keeps the exact decimal sum (same contract as
           // the single-table path, rewrite/Decompose Average case); the
           // combine's division result is cast back to the original avg
-          // type by rewriteOut's Cast, so precision/scale match vanilla.
+          // type by spliceCombined's Cast, so precision/scale match vanilla.
           val childC = ae.filter match {
             case Some(p) if !cross =>
               when(Shims.column(p), Shims.column(a.child))
@@ -3267,36 +3118,11 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
       else joined.groupBy(finalGroupCols: _*)
         .agg(combineCols.head, combineCols.tail: _*)
 
-    // original output expressions over the combine's columns (same
-    // rewrite scheme as execute()'s finalize)
-    def rewriteOut(e: Expression): Expression = {
-      val gIdx = agg.groupingExpressions.indexWhere(_.semanticEquals(e))
-      if (gIdx >= 0)
-        UnresolvedAttribute(Seq(if (groupSide(gIdx)) s"_ga$gIdx" else s"_gb$gIdx"))
-      else e match {
-        case ae: AggregateExpression =>
-          val i = aggExprs.indexWhere(_.semanticEquals(ae))
-          require(i >= 0, s"unmapped aggregate ${ae.sql}")
-          Cast(UnresolvedAttribute(Seq(s"_r$i")), ae.dataType)
-        case _ => e.withNewChildren(e.children.map(rewriteOut))
-      }
-    }
-    val outCols: Seq[Column] = agg.aggregateExpressions.map { o =>
-      val core = o match {
-        case Alias(child, _) => child
-        case other => other
-      }
-      Shims.column(rewriteOut(core)).as(o.name)
-    }
-    val finalCore = resultDF.select(outCols: _*)
-    val finalPlan = Shims.queryExecution(finalCore).analyzed
-    val aligned = Project(
-      finalPlan.output.zip(agg.output).map { case (na, oo) =>
-        Alias(na, oo.name)(exprId = oo.exprId)
-      }, finalPlan)
+    val plan = spliceCombined(analyzed, agg, aggExprs, resultDF,
+      jx => if (groupSide(jx)) s"_ga$jx" else s"_gb$jx")
     config.log.info(fp, "factorized join: answered from two per-side twin " +
       "states combined at join-key grain")
-    Some(analyzed.transformUp { case n if n eq agg => aligned })
+    Some(plan)
   }
 
   /** Reference README.md:130-132's LAST unimplemented roadmap item: an
@@ -3329,7 +3155,7 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
     * granularity. */
   private def dynNoGroupRewrite(spark: SparkSession,
       analyzed: LogicalPlan): Option[LogicalPlan] = {
-    import org.apache.spark.sql.catalyst.expressions.Cast
+    if (!config.dynamicBoundBucketGranularity) return None
 
     val aggs = analyzed.collect { case a: Aggregate => a }
     if (aggs.size != 1) return None
@@ -3354,9 +3180,7 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
       config.log.info(fp, s"no-group dynamic bound bail: $msg")
       None
     }
-    def hasSub(es: Seq[Expression]): Boolean = es.exists(_.exists(
-      _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.PlanExpression[_]]))
-    if (!agg.expressions.forall(_.deterministic) || hasSub(agg.expressions))
+    if (!agg.expressions.forall(_.deterministic) || hasSubquery(agg.expressions))
       return None
     // the filter chain must contain exactly one dynamic lower bound (and
     // nothing unstable) — otherwise this rewrite has no reason to exist
@@ -3373,7 +3197,7 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
           case graft.analysis.Stability.Stable => walk(ch)
           case _ => ok = false
         }
-      case Project(es, ch) if es.forall(_.deterministic) && !hasSub(es) =>
+      case Project(es, ch) if es.forall(_.deterministic) && !hasSubquery(es) =>
         walk(ch)
       case SubqueryAlias(_, ch) => walk(ch)
       case v: View => walk(v.child)
@@ -3391,38 +3215,66 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
     if (!agg.child.outputSet.contains(tAttr))
       return bail(s"temporal column ${tAttr.name} pruned below the aggregate")
 
-    val childDF = Shims.ofRows(spark, agg.child)
     val aggExprs = distinctAggExprs(agg.aggregateExpressions)
     val rms: Seq[ReAggMeasure] =
       reaggMeasures(aggExprs, msg => bail(msg)) match {
         case Some(r) => r
         case None => return None // reason already logged via bail
       }
-
     // the internal-grain twin IS the supported grouped dynamic-bound
     // shape — hand it to the normal machinery (cache, watermark, answer-
     // time bound over bucket starts, every subsumption)
-    val bucket = org.apache.spark.sql.functions.date_trunc(
-      grain, Shims.column(tAttr))
+    val plan = bucketedTwin(spark, analyzed, agg, aggExprs, rms, agg.child,
+      tAttr, grain, "_dynb")
+      .getOrElse(return bail("internal-grain twin rewrite declined"))
+    config.log.info(fp,
+      (if (grouped) "keys-only dynamic bound" else "no-group dynamic bound") +
+        s": answered via the internal $grain-grain bucketed twin")
+    Some(plan)
+  }
+
+  /** The bucketed twin of the no-group dynamic-bound and temporal-twin
+    * rewrites: `child` grouped by (date_trunc(grain, tAttr) AS
+    * `bucketName`, the query's keys as `_k<j>`) with the measures' twin
+    * columns, handed to [[rewritePlan]] (the fully supported grouped
+    * shape), re-aggregated per key by the measures' combines and spliced
+    * in place of `agg`. None when the twin's own rewrite declines. */
+  private def bucketedTwin(spark: SparkSession, analyzed: LogicalPlan,
+      agg: Aggregate, aggExprs: Seq[AggregateExpression],
+      rms: Seq[ReAggMeasure], child: LogicalPlan, tAttr: Attribute,
+      grain: String, bucketName: String): Option[LogicalPlan] = {
     val keyCols = agg.groupingExpressions.zipWithIndex.map {
       case (e, j) => Shims.column(e).as(s"_k$j")
     }
-    val twinAggCols = rms.flatMap(_.twinCols).map { case (n, c) => c.as(n) }
-    val twinDF = childDF.groupBy(bucket.as("_dynb") +: keyCols: _*)
+    val twinAggCols = rms.flatMap(_.twinCols).map { case (n, cc) => cc.as(n) }
+    val bucket = org.apache.spark.sql.functions.date_trunc(
+      grain, Shims.column(tAttr))
+    val twinDF = Shims.ofRows(spark, child)
+      .groupBy(bucket.as(bucketName) +: keyCols: _*)
       .agg(twinAggCols.head, twinAggCols.tail: _*)
-    val twinPlan = Shims.queryExecution(twinDF).analyzed
-    val twinAns = rewritePlan(spark, twinPlan).map(Shims.ofRows(spark, _))
-      .getOrElse(return bail("internal-grain twin rewrite declined"))
-
-    val combineCols = rms.zipWithIndex.map { case (r, i) => r.combine.as(s"_r$i") }
-    val resultDF =
-      if (!grouped) twinAns.agg(combineCols.head, combineCols.tail: _*)
-      else twinAns
+    rewritePlan(spark, Shims.queryExecution(twinDF).analyzed).map { twin =>
+      val combineCols =
+        rms.zipWithIndex.map { case (r, i) => r.combine.as(s"_r$i") }
+      val resultDF = Shims.ofRows(spark, twin)
         .groupBy(agg.groupingExpressions.indices.map(j => col(s"_k$j")): _*)
         .agg(combineCols.head, combineCols.tail: _*)
+      spliceCombined(analyzed, agg, aggExprs, resultDF, j => s"_k$j")
+    }
+  }
+
+  /** Splice a combine frame in place of `agg`: the original outputs
+    * re-expressed over its columns — group key j read from `keyCol(j)`,
+    * measure i from `_r$i` cast back to its type (the rewrite scheme of
+    * execute()'s finalize) — under the original output exprIds. Shared
+    * by the factorized, no-group dynamic-bound and temporal-twin
+    * rewrites. */
+  private def spliceCombined(analyzed: LogicalPlan, agg: Aggregate,
+      aggExprs: Seq[AggregateExpression], combined: DataFrame,
+      keyCol: Int => String): LogicalPlan = {
+    import org.apache.spark.sql.catalyst.expressions.Cast
     def rewriteOut(e: Expression): Expression = {
       val gi = agg.groupingExpressions.indexWhere(_.semanticEquals(e))
-      if (gi >= 0) UnresolvedAttribute(Seq(s"_k$gi"))
+      if (gi >= 0) UnresolvedAttribute(Seq(keyCol(gi)))
       else e match {
         case ae: AggregateExpression =>
           val i = aggExprs.indexWhere(_.semanticEquals(ae))
@@ -3431,22 +3283,14 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
         case _ => e.withNewChildren(e.children.map(rewriteOut))
       }
     }
-    val outCols: Seq[Column] = agg.aggregateExpressions.map { o =>
-      val core = o match {
-        case Alias(child, _) => child
-        case other => other
-      }
-      Shims.column(rewriteOut(core)).as(o.name)
-    }
-    val finalPlan = Shims.queryExecution(resultDF.select(outCols: _*)).analyzed
+    val outCols: Seq[Column] = agg.aggregateExpressions.map(o =>
+      Shims.column(rewriteOut(unalias(o))).as(o.name))
+    val finalPlan = Shims.queryExecution(combined.select(outCols: _*)).analyzed
     val aligned = Project(
       finalPlan.output.zip(agg.output).map { case (na, oo) =>
         Alias(na, oo.name)(exprId = oo.exprId)
       }, finalPlan)
-    config.log.info(fp,
-      (if (grouped) "keys-only dynamic bound" else "no-group dynamic bound") +
-        s": answered via the internal $grain-grain bucketed twin")
-    Some(analyzed.transformUp { case n if n eq agg => aligned })
+    analyzed.transformUp { case n if n eq agg => aligned }
   }
 
   /** (twin measure columns, re-aggregation over them) for a measure that
@@ -3462,14 +3306,12 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
     import org.apache.spark.sql.functions.{coalesce, count => fcount,
       max => fmax, min => fmin, sum => fsum, when}
     import org.apache.spark.sql.types.DecimalType
-    def hasSub(es: Seq[Expression]): Boolean = es.exists(_.exists(
-      _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.PlanExpression[_]]))
     Some(aggExprs.zipWithIndex.map { case (ae, i) =>
       if (ae.isDistinct) {
         bail(s"DISTINCT aggregate does not re-aggregate: ${ae.sql}")
         return None
       }
-      if (ae.filter.exists(p => !p.deterministic || hasSub(Seq(p)))) {
+      if (ae.filter.exists(p => !p.deterministic || hasSubquery(Seq(p)))) {
         bail(s"non-deterministic or subquery FILTER: ${ae.sql}")
         return None
       }
@@ -3525,7 +3367,6 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
     * documented trade. */
   private def bucketTwinRewrite(spark: SparkSession,
       analyzed: LogicalPlan, c: Cacheable): Option[LogicalPlan] = {
-    import org.apache.spark.sql.catalyst.expressions.Cast
     val grain = config.temporalTwinGrain.getOrElse(return None)
     if (c.temporalGroupIdx.isDefined) return None // already bucket-keyed
     if (c.agg.groupingExpressions.isEmpty) return None // dynNoGroup's turf
@@ -3549,49 +3390,12 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
     // build the twin from the ORIGINAL (widened) chain: a dynamic bound
     // stays IN the twin plan, whose own decide() handles it through the
     // grouped bucket-granularity machinery
-    val childDF = Shims.ofRows(spark, c.child)
-    val bucket = org.apache.spark.sql.functions.date_trunc(
-      grain, Shims.column(c.temporalAttr))
-    val keyCols = agg.groupingExpressions.zipWithIndex.map {
-      case (e, j) => Shims.column(e).as(s"_k$j")
-    }
-    val twinAggCols = rms.flatMap(_.twinCols).map { case (n, cc) => cc.as(n) }
-    val twinDF = childDF.groupBy(bucket.as("_ttb") +: keyCols: _*)
-      .agg(twinAggCols.head, twinAggCols.tail: _*)
-    val twinPlan = Shims.queryExecution(twinDF).analyzed
-    val twinAns = rewritePlan(spark, twinPlan).map(Shims.ofRows(spark, _))
+    val plan = bucketedTwin(spark, analyzed, agg, c.aggExprs, rms, c.child,
+      c.temporalAttr, grain, "_ttb")
       .getOrElse(return bail("twin rewrite declined"))
-
-    val combineCols = rms.zipWithIndex.map { case (r, i) => r.combine.as(s"_r$i") }
-    val resultDF = twinAns
-      .groupBy(agg.groupingExpressions.indices.map(j => col(s"_k$j")): _*)
-      .agg(combineCols.head, combineCols.tail: _*)
-    def rewriteOut(e: Expression): Expression = {
-      val gi = agg.groupingExpressions.indexWhere(_.semanticEquals(e))
-      if (gi >= 0) UnresolvedAttribute(Seq(s"_k$gi"))
-      else e match {
-        case ae: AggregateExpression =>
-          val i = c.aggExprs.indexWhere(_.semanticEquals(ae))
-          require(i >= 0, s"unmapped aggregate ${ae.sql}")
-          Cast(UnresolvedAttribute(Seq(s"_r$i")), ae.dataType)
-        case _ => e.withNewChildren(e.children.map(rewriteOut))
-      }
-    }
-    val outCols: Seq[Column] = agg.aggregateExpressions.map { o =>
-      val core = o match {
-        case Alias(child, _) => child
-        case other => other
-      }
-      Shims.column(rewriteOut(core)).as(o.name)
-    }
-    val finalPlan = Shims.queryExecution(resultDF.select(outCols: _*)).analyzed
-    val aligned = Project(
-      finalPlan.output.zip(agg.output).map { case (na, oo) =>
-        Alias(na, oo.name)(exprId = oo.exprId)
-      }, finalPlan)
     config.log.info(fp, s"temporal twin: answered via the internal " +
       s"$grain × keys bucketed twin (bucket-grain repairs/bands apply)")
-    Some(analyzed.transformUp { case n if n eq agg => aligned })
+    Some(plan)
   }
 
   /** Reference README.md:130's FIRST roadmap item ("Simple filter
@@ -3623,7 +3427,6 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
       analyzed: LogicalPlan): Option[LogicalPlan] = {
     import org.apache.spark.sql.catalyst.expressions.{
       GreaterThanOrEqual, LessThan, Literal}
-    if (!config.filterQueryState) return None
     if (analyzed.isStreaming) return None
     if (analyzed.exists {
       case _: Aggregate => true
@@ -3635,20 +3438,6 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
     // unchanged dims and the delta's output rows are exactly the new
     // result rows — the same staleness contract the aggregate path's
     // static-dim joins carry. Anything else runs vanilla.
-    def staticSide(side: LogicalPlan): Boolean = {
-      val leavesOk = side.collectLeaves().forall {
-        case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-          true
-        case l if Shims.isScanLeaf(l) =>
-          config.isDeclaredStatic(Shims.sourcePaths(l))
-        case _ => false
-      }
-      leavesOk && side.collect { case n => n }.forall(_.expressions.forall(
-        e => e.deterministic &&
-          !e.exists(_.isInstanceOf[
-            org.apache.spark.sql.catalyst.expressions.PlanExpression[_]]) &&
-          !graft.analysis.NowBounds.containsNow(e)))
-    }
     // the cacheable chain: strip alias/sort wrappers from the root, then
     // require Project*/Filter+ over a single scan leaf. A LIMIT descends
     // only when a Sort lies beneath it (ORDER BY … LIMIT k — the top-k
@@ -3675,29 +3464,27 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
     val chain = descend(analyzed)
     val needles = config.temporalColumns.map(_.toLowerCase) +
       config.defaultTemporalColumn.toLowerCase
-    def hasSub(es: Seq[Expression]): Boolean = es.exists(_.exists(
-      _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.PlanExpression[_]]))
     var nFilters = 0
     var leaf: Option[LogicalPlan] = None
     var ok = true
     def walk(p: LogicalPlan): Unit = if (ok) p match {
       case Filter(cond, ch) =>
-        if (!cond.deterministic || hasSub(Seq(cond))) ok = false
+        if (!cond.deterministic || hasSubquery(Seq(cond))) ok = false
         else Stability.find(cond, needles) match {
           case Stability.Stable => nFilters += 1; walk(ch)
           case _ => ok = false // dynamic bounds / now() rows: vanilla
         }
       case Project(es, ch) =>
-        if (es.forall(_.deterministic) && !hasSub(es)) walk(ch) else ok = false
+        if (es.forall(_.deterministic) && !hasSubquery(es)) walk(ch) else ok = false
       case SubqueryAlias(_, ch) => walk(ch)
       case v: View => walk(v.child)
       case jn: Join =>
         import org.apache.spark.sql.catalyst.plans.{
           Inner, LeftOuter, RightOuter}
         val okCond = jn.condition.exists(c => c.deterministic &&
-          !hasSub(Seq(c)) && !graft.analysis.NowBounds.containsNow(c))
+          !hasSubquery(Seq(c)) && !graft.analysis.NowBounds.containsNow(c))
         if (!okCond) ok = false
-        else (jn.joinType, staticSide(jn.left), staticSide(jn.right)) match {
+        else (jn.joinType, isStaticSide(jn.left), isStaticSide(jn.right)) match {
           // fact preserved / dim inner only (a dim on the outer side is
           // merge-unsound: an appended fact row could match a previously
           // null-extended dim row and REMOVE an output row)
@@ -3933,7 +3720,6 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
       stateSchema: StructType): Option[graft.cache.CachedState] = {
     import org.apache.spark.sql.catalyst.expressions.EqualTo
     import org.apache.spark.sql.catalyst.plans.Inner
-    if (!config.rejoinFromFactState) return None
     // V1 shape: Filter / SubqueryAlias / pass-through-Project chain over
     // exactly one join
     var filters = List.empty[Expression] // outermost-first
@@ -3989,7 +3775,7 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
     val fkTwinIdx = if (fkPos >= 0) fkPos else factGroups.length
     def echoOf(g: Expression): NamedExpression =
       c.agg.aggregateExpressions.find { o =>
-        (o match { case Alias(ch, _) => ch; case x => x }).semanticEquals(g)
+        unalias(o).semanticEquals(g)
       }.getOrElse(g match {
         case ne: NamedExpression => ne
         case e => Alias(e, "_b")()
@@ -4005,11 +3791,7 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
       twinGroups.zipWithIndex.map { case (g, i) =>
         org.apache.spark.sql.types.StructField(s"_g$i", g.dataType)
       } ++ stateSchema.drop(nGroup))
-    twinState(fp2)
-      .filter(cs => schemaCompatible(cs.schema, twinStateSchema))
-      // composes with measure subsumption: the fact-keyed twin may exist
-      // only as a measure-superset entry
-      .orElse(supersetMeasureState(c.copy(agg = twin), twinStateSchema))
+    lookupTwin(Rejoin, fp2, c.copy(agg = twin), twinStateSchema, 0)
       .map { cs =>
         config.log.info(c.fingerprint,
           s"rejoin hit: replaying (${fk.name})-keyed fact state " +
@@ -4078,7 +3860,6 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
     * fingerprint, so the next run hits directly. */
   private def supersetMeasureState(c: Cacheable,
       stateSchema: StructType): Option[graft.cache.CachedState] = {
-    if (!config.remeasureFromSupersetState) return None
     val needed = measureRows(c)
     val nGroup = c.agg.groupingExpressions.length
     config.cache.entriesForBase(baseFingerprint(c.agg)).view
@@ -4182,15 +3963,9 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
           probeTwin(rest, depth).map { cs =>
             config.log.info(logFp, "reproject (rows) hit: replaying the " +
               "full-width twin re-projected to the slice")
-            val cols = es.map { ne =>
-              val core = ne match {
-                case Alias(c, _) => c
-                case other => other
-              }
-              Shims.column(core.transform {
-                case a: Attribute => UnresolvedAttribute(Seq(a.name))
-              }).as(ne.name)
-            }
+            val cols = es.map(ne => Shims.column(unalias(ne).transform {
+              case a: Attribute => UnresolvedAttribute(Seq(a.name))
+            }).as(ne.name))
             graft.cache.CachedState(cs.timestampMicros,
               rowSchema(p), s => cs.read(s).select(cols: _*))
           }
@@ -4236,6 +4011,51 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
 }
 
 object IncrementalAggExecutor {
+  /** Where a subsumption lookup starts: the query's own exact-fingerprint
+    * miss, or the twin a probe built. */
+  private sealed abstract class Site
+  private case object Query extends Site
+  /** The aggregate subsumption probes. Each builds twin plans of the query
+    * it is handed, looks them up through `lookupTwin`, and on a hit logs
+    * `<name> hit` and turns the twin's state into the query's state. */
+  private sealed abstract class Probe extends Site
+  private case object Regrain extends Probe   // finer date_trunc grain
+  private case object Redim extends Probe     // one more declared dim key
+  private case object Refilter extends Probe  // dim conjunct → dim key
+  private case object Rerange extends Probe   // time bounds stripped
+  private case object Rehop extends Probe     // hop → tumbling at the slide
+  private case object Retumble extends Probe  // finer tumbling window
+  private case object Rewindow extends Probe  // window → date_trunc spelling
+  private case object Regroup extends Probe   // grouping sets → drill-down
+  private case object Rejoin extends Probe    // dim breakdown → fact keys
+  private case object Remeasure extends Probe // superset of the measures
+
+  /** The composition table — the one statement of which probe may answer
+    * for which. On a miss of `from`'s plan, the probes are tried in this
+    * order with the depth given (only redim, refilter and rerange read
+    * it: they stop at depth 3, so a large dim declaration cannot make a
+    * miss expensive). Every composition is sound for the same reason a
+    * single probe is: each step is a re-aggregation, slice or projection
+    * of mergeable state. Each row is a rule, not an oversight: a subset
+    * keeps the recursion finite, keeps a composition sound, or leaves out
+    * probes that cannot match the twin's shape. */
+  private def composition(from: Site, depth: Int): (Seq[Probe], Int) =
+    from match {
+      case Query => (Seq(Regrain, Rerange, Rehop, Retumble, Rewindow,
+        Regroup, Redim, Refilter, Rejoin, Remeasure), 0)
+      case Regrain => (Seq(Remeasure), 0)
+      case Redim => (Seq(Regrain, Redim, Rerange, Remeasure), depth + 1)
+      case Refilter =>
+        (Seq(Regrain, Redim, Refilter, Rerange, Remeasure), depth + 1)
+      case Rerange => (Seq(Regrain, Redim, Refilter, Remeasure), depth + 1)
+      case Rehop => (Seq(Redim, Refilter, Remeasure, Retumble), 0)
+      case Retumble => (Seq(Redim, Refilter, Remeasure), 0)
+      case Rewindow => (Seq(Regrain, Redim, Refilter, Remeasure), 0)
+      case Regroup => (Seq(Redim, Refilter, Remeasure), 0)
+      case Rejoin => (Seq(Remeasure), 0)
+      case Remeasure => (Nil, 0)
+    }
+
   /** normalize declared rewrite ranges: drop empties, sort, coalesce
     * overlapping/adjacent — a range declared twice (e.g. once in-process
     * and once through a durable sidecar) must repair once, not re-scan

@@ -146,7 +146,7 @@ class IncrementalAggSpec extends AnyFunSuite {
     assert(log.messages.exists(_.startsWith("cache hit")), log.messages)
   }
 
-  test("joins under the aggregate: factorized when possible, vanilla when flagged off") {
+  test("joins under the aggregate: a two-fact inner join is factorized") {
     val log = new RecordingLog
     val qcs = QueryCacheSession(spark, QueryCacheConfig(new MemoryQueryCache(),
       defaultTemporalColumn = "ts", log = log))
@@ -159,12 +159,6 @@ class IncrementalAggSpec extends AnyFunSuite {
     // round 9: an inner equi-join with no declared-static side is now
     // answered by the FACTORIZED path instead of bailing
     assert(log.messages.exists(_.startsWith("factorized join: answered")), log.messages)
-    // with the flag off, the historical join bail applies
-    val log2 = new RecordingLog
-    val off = QueryCacheSession(spark, QueryCacheConfig(new MemoryQueryCache(),
-      defaultTemporalColumn = "ts", log = log2, factorizedJoinState = false))
-    assert(off.run(joined).collect().head.getLong(0) == ev.count())
-    assert(log2.messages.exists(_.contains("not cacheable")), log2.messages)
   }
 
   test("exact count distinct caches via set-union state") {
@@ -2358,16 +2352,6 @@ class IncrementalAggSpec extends AnyFunSuite {
         .groupBy(date_trunc("hour", col("ts")).as("bucket"))
         .agg(count(lit(1)).as("cnt"))).collect()
     assert(!logC.messages.exists(_.startsWith("remeasure hit")), logC.messages)
-
-    // (d) flag off — probe disabled even though a superset is warm
-    val logD = new RecordingLog
-    QueryCacheSession(spark, QueryCacheConfig(cache,
-        defaultTemporalColumn = "ts", log = logD,
-        remeasureFromSupersetState = false))
-      .run(spark.read.parquet(work).filter(col("value") > 1)
-        .groupBy(date_trunc("hour", col("ts")).as("bucket"))
-        .agg(count(lit(1)).as("cnt"))).collect()
-    assert(!logD.messages.exists(_.startsWith("remeasure hit")), logD.messages)
   }
 
   test("composed subsumption: day-only subset measures from warm hour superset state") {
@@ -2468,7 +2452,7 @@ class IncrementalAggSpec extends AnyFunSuite {
     assert(!log3.messages.exists(_.startsWith("rejoin hit")), log3.messages)
   }
 
-  test("rejoin isolation: left join, dim measures, mixed grouping, extra conjunct, flag off") {
+  test("rejoin isolation: left join, dim measures, mixed grouping, extra conjunct") {
     val (early, late, splitUs) = split()
     val work = tmpDir("rejoin-iso")
     early.write.mode("overwrite").parquet(work)
@@ -2477,10 +2461,9 @@ class IncrementalAggSpec extends AnyFunSuite {
       .groupBy(date_trunc("day", col("ts")).as("day"), col("user_id"))
       .agg(count(lit(1)).as("cnt"), sum("value").as("sum_value"))
     def cfg(log: RecordingLog = new RecordingLog,
-        nowUs: Option[Long] = None,
-        rejoin: Boolean = true) = QueryCacheConfig(cache,
-      defaultTemporalColumn = "ts", overrideNowMicros = nowUs, log = log,
-      rejoinFromFactState = rejoin).withStaticDimensions("customer")
+        nowUs: Option[Long] = None) = QueryCacheConfig(cache,
+      defaultTemporalColumn = "ts", overrideNowMicros = nowUs, log = log)
+      .withStaticDimensions("customer")
     QueryCacheSession(spark, cfg(nowUs = Some(splitUs)))
       .run(factQ(spark.read.parquet(work))).collect()
     late.write.mode("append").parquet(work)
@@ -2525,15 +2508,6 @@ class IncrementalAggSpec extends AnyFunSuite {
         .groupBy(col("c_mktsegment"), date_trunc("day", col("ts")).as("day"))
         .agg(count(lit(1)).as("cnt"), sum("value").as("sum_value"))).collect()
     assert(!logD.messages.exists(_.startsWith("rejoin hit")), logD.messages)
-
-    // (e) flag off
-    val logE = new RecordingLog
-    QueryCacheSession(spark, cfg(logE, rejoin = false))
-      .run(spark.read.parquet(work).filter(col("value") > 1)
-        .join(cust, col("user_id") === col("c_custkey"))
-        .groupBy(col("c_mktsegment"), date_trunc("day", col("ts")).as("day"))
-        .agg(count(lit(1)).as("cnt"), sum("value").as("sum_value"))).collect()
-    assert(!logE.messages.exists(_.startsWith("rejoin hit")), logE.messages)
   }
 
   test("heavy hitters through the cache: bounds hold in the shrinking regime") {
@@ -2723,28 +2697,6 @@ class IncrementalAggSpec extends AnyFunSuite {
     assert(logM.messages.exists(m => m.startsWith("rerange hit") &&
       m.contains("compensation scan over 1 partial edge bucket(s)")),
       logM.messages)
-
-    // compensation off: an unaligned bound bails to a plain miss, still
-    // correct (fresh window so the run above's own stored state can't hit)
-    def winMisaligned2(df: DataFrame) = agg(df.filter(col("value") > 1 &&
-      col("ts") >= "2024-01-09 10:45:00"))
-    val logMOff = new RecordingLog
-    val misOffDF = QueryCacheSession(spark, QueryCacheConfig(cache,
-        defaultTemporalColumn = "ts", log = logMOff,
-        rangeCompensationScan = false))
-      .run(winMisaligned2(spark.read.parquet(work)))
-    assertSameRows(misOffDF, winMisaligned2(eventsFull), tol = 1e-9)
-    assert(!logMOff.messages.exists(_.startsWith("rerange hit")),
-      logMOff.messages)
-
-    // flag off: the same cold window runs as a plain miss
-    val logOff = new RecordingLog
-    val offDF = QueryCacheSession(spark, QueryCacheConfig(
-        new MemoryQueryCache(), defaultTemporalColumn = "ts", log = logOff,
-        rerangeFromUnboundedState = false))
-      .run(win(spark.read.parquet(work)))
-    assertSameRows(offDF, win(eventsFull), tol = 1e-9)
-    assert(!logOff.messages.exists(_.startsWith("rerange hit")), logOff.messages)
   }
 
   test("rerange composes with refilter: windowed dim slice from warm unbounded drill-down") {
@@ -3324,7 +3276,7 @@ class IncrementalAggSpec extends AnyFunSuite {
       log2.messages)
   }
 
-  test("factorized join: unsupported shapes and flag-off run vanilla") {
+  test("factorized join: unsupported shapes run vanilla") {
     val (early, late, splitUs) = split()
     def part(df: DataFrame, t: String) = df
       .filter(col("event_type") === t).select("ts", "user_id", "value")
@@ -3333,10 +3285,10 @@ class IncrementalAggSpec extends AnyFunSuite {
     part(early, "click").write.mode("overwrite").parquet(workA)
     part(early, "purchase").write.mode("overwrite").parquet(workB)
 
-    def run(log: RecordingLog, flag: Boolean = true)(
+    def run(log: RecordingLog)(
         q: (DataFrame, DataFrame) => DataFrame): DataFrame =
       QueryCacheSession(spark, QueryCacheConfig(new MemoryQueryCache(),
-        defaultTemporalColumn = "ts", log = log, factorizedJoinState = flag))
+        defaultTemporalColumn = "ts", log = log))
         .run(q(spark.read.parquet(workA), spark.read.parquet(workB)))
 
     // left outer joins now FACTORIZE (see the dedicated outer test);
@@ -3356,15 +3308,6 @@ class IncrementalAggSpec extends AnyFunSuite {
     assertSameRows(run(logCross)(qCross), vanilla(qCross))
     assert(!logCross.messages.exists(_.startsWith("factorized join: answered")),
       logCross.messages)
-
-    // flag off: the same inner query runs vanilla
-    def qInner(a: DataFrame, b: DataFrame) =
-      a.join(b, a("user_id") === b("user_id"), "inner")
-        .groupBy(date_trunc("hour", a("ts")).as("hour"))
-        .agg(count(lit(1)).as("cnt"))
-    val logOff = new RecordingLog
-    assertSameRows(run(logOff, flag = false)(qInner), vanilla(qInner))
-    assert(!logOff.messages.exists(_.contains("factorized join")), logOff.messages)
   }
 
   test("regroup: rollup/cube/grouping-sets answered from warm drill-down state, zero fact rows scanned") {
@@ -3443,15 +3386,6 @@ class IncrementalAggSpec extends AnyFunSuite {
       .run(roll(spark.read.parquet(work))).collect()
     assert(log5.messages.exists(_.startsWith("cache hit")), log5.messages)
     assert(!log5.messages.exists(_.startsWith("regroup hit")), log5.messages)
-
-    // flag off: cold rollup runs as a plain miss
-    val logOff = new RecordingLog
-    val offDF = QueryCacheSession(spark, QueryCacheConfig(
-        new MemoryQueryCache(), defaultTemporalColumn = "ts", log = logOff,
-        regroupFromDrilldownState = false))
-      .run(roll(spark.read.parquet(work)))
-    assertSameRows(offDF, roll(spark.read.parquet(work)), tol = 1e-9)
-    assert(!logOff.messages.exists(_.startsWith("regroup hit")), logOff.messages)
   }
 
   test("regroup works through the durable cache across sessions") {
@@ -3558,17 +3492,6 @@ class IncrementalAggSpec extends AnyFunSuite {
         col("sum_value"), col("min_value")), tol = 1e-9)
     assert(!logOdd.messages.exists(_.startsWith("rehop hit")), logOdd.messages)
     assert(logOdd.messages.exists(_.startsWith("rehop bail")), logOdd.messages)
-
-    // flag off: the same cold hopping query runs as a plain miss
-    val logOff = new RecordingLog
-    val offDF = QueryCacheSession(spark, QueryCacheConfig(
-        new MemoryQueryCache(), defaultTemporalColumn = "ts", log = logOff,
-        rehopFromTumblingState = false))
-      .run(hop(spark.read.parquet(work)))
-    assertSameRows(offDF.select(col("w.start"), col("cnt"), col("sum_value")),
-      hop(eventsFull).select(col("w.start"), col("cnt"), col("sum_value")),
-      tol = 1e-9)
-    assert(!logOff.messages.exists(_.startsWith("rehop hit")), logOff.messages)
   }
 
   test("retumble: coarse tumbling window answered from warm finer tumbling state") {
@@ -3630,15 +3553,6 @@ class IncrementalAggSpec extends AnyFunSuite {
       .run(q("25 minutes")(spark.read.parquet(work)))
     assertSameRows(flat(oddDF), flat(q("25 minutes")(eventsFull)), tol = 1e-9)
     assert(!logOdd.messages.exists(_.startsWith("retumble hit")), logOdd.messages)
-
-    // flag off (regrainFromFinerState gates both faces): plain miss
-    val logOff = new RecordingLog
-    val offDF = QueryCacheSession(spark, QueryCacheConfig(
-        new MemoryQueryCache(), defaultTemporalColumn = "ts", log = logOff,
-        regrainFromFinerState = false))
-      .run(q("1 hour")(spark.read.parquet(work)))
-    assertSameRows(flat(offDF), flat(q("1 hour")(eventsFull)), tol = 1e-9)
-    assert(!logOff.messages.exists(_.startsWith("retumble hit")), logOff.messages)
   }
 
   test("rehop composes with retumble: hopping query served from a 5-minute tumbling state") {
@@ -3772,15 +3686,6 @@ class IncrementalAggSpec extends AnyFunSuite {
       .run(win("7 days")(spark.read.parquet(work)))
     assertSameRows(flat(thuDF), flat(win("7 days")(eventsFull)), tol = 1e-9)
     assert(!logT.messages.exists(_.startsWith("rewindow hit")), logT.messages)
-
-    // flag off: plain miss, still correct
-    val logOff = new RecordingLog
-    val offDF = QueryCacheSession(spark, QueryCacheConfig(
-        new MemoryQueryCache(), defaultTemporalColumn = "ts", log = logOff,
-        regrainFromFinerState = false))
-      .run(win("1 hour")(spark.read.parquet(work)))
-    assertSameRows(flat(offDF), flat(win("1 hour")(eventsFull)), tol = 1e-9)
-    assert(!logOff.messages.exists(_.startsWith("rewindow hit")), logOff.messages)
   }
 
   test("stream-warmed tumbling state serves a cold hopping query across the batch/stream seam") {
@@ -3923,6 +3828,141 @@ class IncrementalAggSpec extends AnyFunSuite {
       tol = 1e-9)
     assert(log.messages.exists(_.startsWith("rehop hit")), log.messages)
     assert(log.messages.exists(_.startsWith("refilter hit")), log.messages)
+  }
+
+  /** warm ONLY `inner` (cold run, append, warm run) on a fresh copy of the
+    * early events, then run `outer` cold through the same cache: returns
+    * (outer answer, its log) */
+  private def composedProbe(tag: String,
+      cfg: (RecordingLog, Option[Long]) => QueryCacheConfig)(
+      inner: DataFrame => DataFrame, outer: DataFrame => DataFrame)
+      : (DataFrame, RecordingLog) = {
+    val (early, late, splitUs) = split()
+    val work = tmpDir(tag)
+    early.write.mode("overwrite").parquet(work)
+    QueryCacheSession(spark, cfg(new RecordingLog, Some(splitUs)))
+      .run(inner(spark.read.parquet(work))).collect()
+    late.write.mode("append").parquet(work)
+    QueryCacheSession(spark, cfg(new RecordingLog, None))
+      .run(inner(spark.read.parquet(work))).collect()
+    val log = new RecordingLog
+    (QueryCacheSession(spark, cfg(log, None)).run(outer(spark.read.parquet(work))),
+      log)
+  }
+
+  test("composed subsumption: rejoin → remeasure, dim breakdown of a subset measure from warm fact-keyed superset state") {
+    val cache = new MemoryQueryCache()
+    def factQ(df: DataFrame) = df.filter(col("value") > 1)
+      .groupBy(date_trunc("day", col("ts")).as("day"), col("user_id"))
+      .agg(count(lit(1)).as("cnt"), sum("value").as("sum_value"))
+    def joinQ(df: DataFrame) = df.filter(col("value") > 1)
+      .join(Tables.customer(spark, sf0001), df("user_id") === col("c_custkey"))
+      .groupBy(col("c_mktsegment"), date_trunc("day", col("ts")).as("day"))
+      .agg(count(lit(1)).as("cnt"))
+    val (df, log) = composedProbe("compose-rejoin-remeasure", (l, now) =>
+      QueryCacheConfig(cache, defaultTemporalColumn = "ts",
+        overrideNowMicros = now, log = l).withStaticDimensions("customer"))(
+      factQ, joinQ)
+    assertSameRows(df, joinQ(eventsFull), tol = 1e-9)
+    assert(log.messages.exists(_.startsWith("rejoin hit")), log.messages)
+    assert(log.messages.exists(_.startsWith("remeasure hit")), log.messages)
+  }
+
+  test("composed subsumption: regroup → refilter, a sliced rollup from the warm unfiltered drill-down") {
+    val cache = new MemoryQueryCache()
+    def drill(df: DataFrame) = df.filter(col("value") > 1)
+      .groupBy(date_trunc("day", col("ts")).as("day"), col("event_type"))
+      .agg(count(lit(1)).as("cnt"), sum("value").as("sum_value"))
+    def rollSlice(df: DataFrame) = df
+      .filter(col("value") > 1 && col("event_type") === "click")
+      .rollup(date_trunc("day", col("ts")).as("day"))
+      .agg(count(lit(1)).as("cnt"), sum("value").as("sum_value"))
+    val (df, log) = composedProbe("compose-regroup-refilter", (l, now) =>
+      QueryCacheConfig(cache, defaultTemporalColumn = "ts",
+        overrideNowMicros = now, log = l).withRedimDimensions("event_type"))(
+      drill, rollSlice)
+    assertSameRows(df, rollSlice(eventsFull), tol = 1e-9)
+    assert(log.messages.exists(_.startsWith("regroup hit")), log.messages)
+    assert(log.messages.exists(_.startsWith("refilter hit")), log.messages)
+  }
+
+  test("composed subsumption: retumble → redim, a coarse window roll-up from the warm finer tumbling drill-down") {
+    val cache = new MemoryQueryCache()
+    def drill(df: DataFrame) = df.filter(col("value") > 1)
+      .groupBy(window(col("ts"), "15 minutes").as("w"), col("event_type"))
+      .agg(count(lit(1)).as("cnt"), sum("value").as("sum_value"))
+    def hourRoll(df: DataFrame) = df.filter(col("value") > 1)
+      .groupBy(window(col("ts"), "1 hour").as("w"))
+      .agg(count(lit(1)).as("cnt"), sum("value").as("sum_value"))
+    def flat(df: DataFrame) = df.select(col("w.start"), col("w.end"),
+      col("cnt"), col("sum_value"))
+    val (df, log) = composedProbe("compose-retumble-redim", (l, now) =>
+      QueryCacheConfig(cache, defaultTemporalColumn = "ts",
+        overrideNowMicros = now, log = l).withRedimDimensions("event_type"))(
+      drill, hourRoll)
+    assertSameRows(flat(df), flat(hourRoll(eventsFull)), tol = 1e-9)
+    assert(log.messages.exists(_.startsWith("retumble hit")), log.messages)
+    assert(log.messages.exists(_.startsWith("redim hit")), log.messages)
+  }
+
+  test("composed subsumption: rewindow → regrain, an hour window from warm minute-trunc state") {
+    val cache = new MemoryQueryCache()
+    def minuteTrunc(df: DataFrame) = df.filter(col("value") > 1)
+      .groupBy(date_trunc("minute", col("ts")).as("bucket"))
+      .agg(count(lit(1)).as("cnt"), sum("value").as("sum_value"))
+    def hourWin(df: DataFrame) = df.filter(col("value") > 1)
+      .groupBy(window(col("ts"), "1 hour").as("w"))
+      .agg(count(lit(1)).as("cnt"), sum("value").as("sum_value"))
+    def flat(df: DataFrame) = df.select(col("w.start"), col("w.end"),
+      col("cnt"), col("sum_value"))
+    val (df, log) = composedProbe("compose-rewindow-regrain", (l, now) =>
+      QueryCacheConfig(cache, defaultTemporalColumn = "ts",
+        overrideNowMicros = now, log = l))(minuteTrunc, hourWin)
+    assertSameRows(flat(df), flat(hourWin(eventsFull)), tol = 1e-9)
+    assert(log.messages.exists(_.startsWith("rewindow hit")), log.messages)
+    assert(log.messages.exists(_.startsWith("regrain hit")), log.messages)
+  }
+
+  test("composed subsumption: redim → rerange, a bounded window from the warm unbounded trunc drill-down") {
+    // the query is a window, so the top-level rerange does not apply; its
+    // rewindow twin (a bounded date_trunc roll-up) reaches the warm
+    // unbounded drill-down through redim, then rerange
+    val cache = new MemoryQueryCache()
+    def drill(df: DataFrame) = df.filter(col("value") > 1)
+      .groupBy(date_trunc("hour", col("ts")).as("bucket"), col("event_type"))
+      .agg(count(lit(1)).as("cnt"), sum("value").as("sum_value"))
+    def winBounded(df: DataFrame) = df
+      .filter(col("value") > 1 &&
+        col("ts") >= "2024-01-08 00:00:00" && col("ts") < "2024-01-15 00:00:00")
+      .groupBy(window(col("ts"), "1 hour").as("w"))
+      .agg(count(lit(1)).as("cnt"), sum("value").as("sum_value"))
+    def flat(df: DataFrame) = df.select(col("w.start"), col("w.end"),
+      col("cnt"), col("sum_value"))
+    val (df, log) = composedProbe("compose-redim-rerange", (l, now) =>
+      QueryCacheConfig(cache, defaultTemporalColumn = "ts",
+        overrideNowMicros = now, log = l).withRedimDimensions("event_type"))(
+      drill, winBounded)
+    assertSameRows(flat(df), flat(winBounded(eventsFull)), tol = 1e-9)
+    assert(log.messages.exists(_.startsWith("redim hit")), log.messages)
+    assert(log.messages.exists(_.startsWith("rerange hit")), log.messages)
+  }
+
+  test("composed subsumption: rerange → remeasure, a window slice of a subset measure from warm unbounded superset state") {
+    val cache = new MemoryQueryCache()
+    def wide(df: DataFrame) = df.filter(col("value") > 1)
+      .groupBy(date_trunc("hour", col("ts")).as("bucket"))
+      .agg(count(lit(1)).as("cnt"), sum("value").as("sum_value"))
+    def narrowWin(df: DataFrame) = df
+      .filter(col("value") > 1 &&
+        col("ts") >= "2024-01-08 00:00:00" && col("ts") < "2024-01-15 00:00:00")
+      .groupBy(date_trunc("hour", col("ts")).as("bucket"))
+      .agg(count(lit(1)).as("cnt"))
+    val (df, log) = composedProbe("compose-rerange-remeasure", (l, now) =>
+      QueryCacheConfig(cache, defaultTemporalColumn = "ts",
+        overrideNowMicros = now, log = l))(wide, narrowWin)
+    assertSameRows(df, narrowWin(eventsFull), tol = 1e-9)
+    assert(log.messages.exists(_.startsWith("rerange hit")), log.messages)
+    assert(log.messages.exists(_.startsWith("remeasure hit")), log.messages)
   }
 
   test("recursive subsumption: two extra dims merge away; double slice strips both") {
